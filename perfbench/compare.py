@@ -18,10 +18,11 @@ matched by seed) and a verdict:
 - ``within bound`` otherwise.
 
 The figures each record holds without a bound (wall ``pass_s``,
-``query_p50_s``, ``query_tail_s`` and ``query_cpu_p50_s``) are
-compared the same way, with verdict ``no bound`` unless a gain. From traced records it prints the tracing overhead (traced
-minus untraced median wall ``pass_s``) and every per-layer metric's
-median delta, largest relative change first.
+``query_p50_s``, ``query_tail_s``, ``query_cpu_p50_s`` and
+``jit_cpu_s``) are compared the same way, with verdict ``no bound``
+unless a gain. From traced records it prints the tracing overhead
+(traced minus untraced median wall ``pass_s``) and every per-layer
+metric's median delta, largest relative change first.
 """
 
 from __future__ import annotations

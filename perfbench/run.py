@@ -3,14 +3,13 @@
 outside, checks every output off the timer, and prints each metric by
 name with its unit.
 
-    python3 perfbench/run.py --workload floor_mix --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload floor_mix --seed 1 --seconds 18 --trace 0
 
 Run it from the root of a checkout. One run is one fresh process on
 ``local[<cores>]`` (default: every core this process may use):
 
-1. set-up: ``session.get_spark`` boots the JVM, then two untimed warm
-   passes build and run every query of the workload; the first one
-   collects each output;
+1. set-up: ``session.get_spark`` boots the JVM, then one untimed warm
+   pass builds every query of the workload and collects its output;
 2. checks, off the timer: each first-pass output against its DuckDB
    oracle, and rows-only outputs for an unchanged content hash on every
    later pass;
@@ -18,14 +17,21 @@ Run it from the root of a checkout. One run is one fresh process on
    .spark(spark, sf_dir)``) and forced with a ``noop`` write; a run
    makes ``--seconds`` divided by the workload's nominal pass length
    passes (at least one), so its work never depends on its speed;
+   each query's figures are medians over those passes;
 4. calibration: three frozen micro-workloads, timed once each, so a
    run on a slower box is recognisable.
 
 Each timed query records its wall time and the CPU time the engine's
 processes (this process, the JVM and its Python workers) used during
-it. ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs
-the same work with per-layer instruments on (``layers.py``) and prints
-the per-layer metrics instead. The last line of standard output is one
+it, without the JVM's JIT compiler threads: their background compiling
+is the JVM warming up, and from one run to the next it moved a pass's
+CPU by more than the program's own work did. The JIT's CPU is reported
+on its own. A speed probe (``probe.py``) running beside the engine
+gives how much slower than its reference speed the shared host ran
+fixed work during each query; the bounded CPU figure is divided by it.
+``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the
+same work with per-layer instruments on (``layers.py``) and prints the
+per-layer metrics instead. The last line of standard output is one
 JSON object: ``{"correct", "attempted", "failed", "metrics"}``. The
 full record of each run goes to ``.perfbench/results/`` in the
 checkout and the spans of a traced run to ``.perfbench/traces/``;
@@ -56,13 +62,20 @@ STATE_DIR = os.path.join(ROOT, ".perfbench")
 # Driver heap: enough for a workload's checkpoints plus shuffle maps at
 # local[4], and small enough to share the machine.
 DRIVER_MEM = "4g"
+# A heap fixed at its maximum does not shrink after the periodic JVM GC
+# and regrow in the next timed pass (which moved a pass's GC CPU from
+# 0.2 to 6 s); compiler threads that never exit keep the JIT's CPU
+# countable to the end.
+DRIVER_JAVA_OPTIONS = f"-Xms{DRIVER_MEM} -XX:-UseDynamicNumberOfCompilerThreads"
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")  # comm, cut to 15 chars
 JVM_GC_EVERY = 16
-WARM_PASSES = 2
+WARM_PASSES = 1
 CLOCK_TICK = os.sysconf("SC_CLK_TCK")
 
 sys.path.insert(0, HERE)
 
 from pools import PASS_SECONDS, WORKLOADS, draw  # noqa: E402
+from probe import SpeedProbe  # noqa: E402
 from stats import tail  # noqa: E402
 
 OPERATOR_KEYS = ("stages", "tasks", "task_run_s", "task_cpu_s", "gc_s", "off_jvm_s",
@@ -125,12 +138,37 @@ def engine_cpu(jvm_pid: int) -> dict[int, float]:
     return out
 
 
+def jit_cpu(jvm_pid: int) -> float:
+    """CPU seconds the JVM's JIT compiler threads used so far."""
+    total = 0.0
+    base = f"/proc/{jvm_pid}/task"
+    for tid in os.listdir(base):
+        try:
+            with open(f"{base}/{tid}/stat") as fh:
+                raw = fh.read()
+        except OSError:  # exited while scanning
+            continue
+        head, rest = raw.rsplit(")", 1)
+        if head.split("(", 1)[1].startswith(JIT_THREADS):
+            f = rest.split()
+            total += (int(f[11]) + int(f[12])) / CLOCK_TICK  # u/s time
+    return total
+
+
 def cpu_between(before: dict[int, float], after: dict[int, float]) -> float:
     """CPU seconds used between two ``engine_cpu`` samples. A process
     that exited in between is left out rather than subtracted: PySpark's
     worker daemon ignores SIGCHLD, so its workers' time never reaches a
     parent's cutime."""
     return sum(v - before.get(pid, 0.0) for pid, v in after.items())
+
+
+def query_medians(per_query: dict[str, list[float]]) -> float:
+    """One pass's figure: each query's median over the timed passes,
+    summed over the queries."""
+    if not all(per_query.values()):
+        return float("nan")
+    return sum(statistics.median(v) for v in per_query.values())
 
 
 def stop_spark(spark) -> None:
@@ -190,8 +228,10 @@ class Run:
         self.wall: list[float] = []  # per timed query: build + force
         self.cpu: list[float] = []  # per timed query: engine CPU seconds
         self.pass_wall: list[float] = []
-        self.pass_cpu: list[float] = []
+        self.pass_jit: list[float] = []
         self.per_query: dict[str, list[float]] = {n: [] for n in self.names}
+        self.per_query_cpu: dict[str, list[float]] = {n: [] for n in self.names}
+        self.timed_spans: list[tuple[str, float, float, float]] = []  # name, start, end, cpu_s
         self.layer_totals: dict[str, float] = {}
         self.since_jvm_gc = 0
 
@@ -201,8 +241,10 @@ class Run:
     def _query(self, name: str, qid: str, collect: bool):
         """Build one query and run it: a noop write, or with ``collect``
         a ``toPandas`` whose frame the checks read. Returns (qd, df, out,
-        build_s, force_s, cpu_s), or None if it raised. CPU reads and
-        trace instruments sit outside the wall timers."""
+        (start, built, end), cpu_s, jit_s) with ``time.perf_counter()``
+        readings, or None if it raised; ``cpu_s`` leaves out the JIT's
+        ``jit_s``. CPU reads and trace instruments
+        sit outside the wall timers."""
         from kafka_streams_aggregate_spark.registry import load_all
 
         self.attempted += 1
@@ -214,7 +256,7 @@ class Run:
         if self.trace:
             self.ledger.mark()
             seen = set(self.listener.started)
-        c0 = engine_cpu(self.jvm_pid)
+        c0, j0 = engine_cpu(self.jvm_pid), jit_cpu(self.jvm_pid)
         try:
             with self._span("query", qid):
                 with self._span("queries.build", qid):
@@ -229,13 +271,14 @@ class Run:
             self.failed += 1
             self.errors.setdefault(name, f"{type(exc).__name__}: {exc}"[:200])
             return None
-        cpu_s = cpu_between(c0, engine_cpu(self.jvm_pid))
+        jit_s = jit_cpu(self.jvm_pid) - j0
+        cpu_s = cpu_between(c0, engine_cpu(self.jvm_pid)) - jit_s
         if self.trace:
             drains, lost = self.listener.collect(self.spark, seen)
             self.lost_drains += lost
             self.failed += lost
             self._layers = {**self.ledger.since_mark(), **drains}
-        return qd, df, out, t1 - t0, t2 - t1, cpu_s
+        return qd, df, out, (t0, t1, t2), cpu_s, jit_s
 
     def _hygiene(self) -> None:
         """bench.py's off-timer heap hygiene: drop finished plans and
@@ -261,9 +304,7 @@ class Run:
 
     def _warm_passes(self) -> None:
         """Untimed runs of every query. The first one's collected outputs
-        are the ones checked against the oracles; the later ones let the
-        JIT catch up, whose background compiling otherwise moved a timed
-        pass's CPU by a fifth from run to run."""
+        are the ones checked against the oracles."""
         for i in range(WARM_PASSES):
             for name in self.names:
                 got = self._query(name, f"warm{i}:{name}", collect=i == 0)
@@ -276,28 +317,31 @@ class Run:
         collected again after it, off the timer, for the stable-hash
         check."""
         t0 = time.perf_counter()
-        wall_total, cpu_total, rows_only = 0.0, 0.0, []
+        wall_total, jit_total, rows_only = 0.0, 0.0, []
         layers: dict[str, float] = {}
         for name in self.names:
             got = self._query(name, f"{label}:{name}", collect=False)
             if got is not None:
-                qd, df, _, build_s, force_s, cpu_s = got
+                qd, df, _, (start, built, end), cpu_s, jit_s = got
                 if qd.oracle is None:
                     rows_only.append((qd, df))
+                build_s, force_s = built - start, end - built
                 wall = build_s + force_s
                 wall_total += wall
-                cpu_total += cpu_s
+                jit_total += jit_s
                 self.wall.append(wall)
                 self.cpu.append(cpu_s)
                 self.per_query[name].append(wall)
+                self.per_query_cpu[name].append(cpu_s)
+                self.timed_spans.append((name, start, end, cpu_s))
                 if self.trace:
-                    step = dict(self._layers, build_s=build_s, force_s=force_s,
+                    step = dict(self._layers, build_s=build_s, force_s=force_s, jit_cpu_s=jit_s,
                                 non_task_s=wall - self._layers["task_run_s"] / self.args.cores)
                     for k, v in step.items():
                         layers[k] = layers.get(k, 0.0) + v
             self._hygiene()
         self.pass_wall.append(wall_total)
-        self.pass_cpu.append(cpu_total)
+        self.pass_jit.append(jit_total)
         for k, v in layers.items():
             self.layer_totals[k] = self.layer_totals.get(k, 0.0) + v
         elapsed = time.perf_counter() - t0
@@ -315,33 +359,38 @@ class Run:
             from layers import DrainListener, Spans, StageLedger
 
             self.spans = Spans()
-        with self._span("session"):
-            t0 = time.perf_counter()
-            self.spark = get_spark(
-                app_name="perfbench", master=f"local[{self.args.cores}]",
-                extra_conf={"spark.ui.showConsoleProgress": "false"},
-            )
-            boot_s = time.perf_counter() - t0
+        self.probe = SpeedProbe()
         try:
-            self.jvm_pid = self.spark.sparkContext._gateway.proc.pid
-            if self.trace:
-                self.ledger = StageLedger(self.spark)
-                self.listener = DrainListener()
-                self.spark.streams.addListener(self.listener)
-            load_all()
-            self.checker = OutputChecker(self.args.sf_dir)
-            t_warm = time.perf_counter()
-            with self._span("warm"):
-                self._warm_passes()
-            t_first_timed = time.perf_counter()
-            warm_s = t_first_timed - t_warm - self.check_s
-            setup_s = t_first_timed - _PROCESS_T0 - self.check_s
-            passes = max(1, int(self.args.seconds // PASS_SECONDS[self.args.workload]))
-            timed_s = sum(self._timed_pass(f"p{i}") for i in range(passes))
-            calib = calibrate(self.spark, self.args.sf_dir)
-            self.checker.close()
+            with self._span("session"):
+                t0 = time.perf_counter()
+                self.spark = get_spark(
+                    app_name="perfbench", master=f"local[{self.args.cores}]",
+                    extra_conf={"spark.ui.showConsoleProgress": "false",
+                                "spark.driver.extraJavaOptions": DRIVER_JAVA_OPTIONS},
+                )
+                boot_s = time.perf_counter() - t0
+            try:
+                self.jvm_pid = self.spark.sparkContext._gateway.proc.pid
+                if self.trace:
+                    self.ledger = StageLedger(self.spark)
+                    self.listener = DrainListener()
+                    self.spark.streams.addListener(self.listener)
+                load_all()
+                self.checker = OutputChecker(self.args.sf_dir)
+                t_warm = time.perf_counter()
+                with self._span("warm"):
+                    self._warm_passes()
+                t_first_timed = time.perf_counter()
+                warm_s = t_first_timed - t_warm - self.check_s
+                setup_s = t_first_timed - _PROCESS_T0 - self.check_s
+                passes = max(1, int(self.args.seconds // PASS_SECONDS[self.args.workload]))
+                timed_s = sum(self._timed_pass(f"p{i}") for i in range(passes))
+                calib = calibrate(self.spark, self.args.sf_dir)
+                self.checker.close()
+            finally:
+                stop_spark(self.spark)
         finally:
-            stop_spark(self.spark)
+            self.probe.stop()
         return self._record(boot_s, warm_s, setup_s, timed_s, calib)
 
     def _record(self, boot_s, warm_s, setup_s, timed_s, calib) -> dict:
@@ -350,6 +399,11 @@ class Run:
         nan = float("nan")
         pass_s = statistics.median(self.pass_wall) if self.pass_wall else nan
         tail_s, tail_pct = tail(self.wall)
+        per_query_ref: dict[str, list[float]] = {n: [] for n in self.names}
+        slowdowns = []
+        for name, start, end, cpu_s in self.timed_spans:
+            slowdowns.append(self.probe.slowdown(start, end))
+            per_query_ref[name].append(cpu_s / slowdowns[-1])
         layers = {"session.boot_s": boot_s, "session.warm_s": warm_s}
         if self.trace:
             per_pass = {k: v / len(self.pass_wall) for k, v in self.layer_totals.items()}
@@ -366,7 +420,8 @@ class Run:
             layers["oracle.checked"] = float(self.checker.checked)
             layers["oracle.mismatch"] = float(len(self.checker.mismatches))
             layers["trace.pass_s"] = pass_s
-            layers["trace.pass_cpu_s"] = statistics.median(self.pass_cpu)
+            layers["trace.pass_ref_cpu_s"] = query_medians(per_query_ref)
+            layers["jvm.jit_cpu_s"] = per_pass.get("jit_cpu_s", 0.0)
         return {
             "workload": self.args.workload, "seed": self.args.seed,
             "trace": self.args.trace, "seconds": self.args.seconds,
@@ -378,17 +433,22 @@ class Run:
             "queries": self.names, "passes": len(self.pass_wall), "timed_s": timed_s,
             "end_to_end": {
                 "setup_s": setup_s,
-                "pass_cpu_s": statistics.median(self.pass_cpu) if self.pass_cpu else nan,
+                "pass_ref_cpu_s": query_medians(per_query_ref),
             },
             "extra": {
+                "pass_cpu_s": query_medians(self.per_query_cpu),
                 "pass_s": pass_s,
                 "query_p50_s": statistics.median(self.wall) if self.wall else nan,
                 "query_tail_s": tail_s,
                 "query_cpu_p50_s": statistics.median(self.cpu) if self.cpu else nan,
+                "jit_cpu_s": statistics.median(self.pass_jit) if self.pass_jit else nan,
             },
+            "probe_slowdown": statistics.median(slowdowns) if slowdowns else nan,
             "tail_pct": tail_pct, "n_samples": len(self.wall),
             "per_layer": layers,
             "per_query_s": self.per_query,
+            "per_query_cpu_s": self.per_query_cpu,
+            "per_query_ref_cpu_s": per_query_ref,
             "attempted": self.attempted, "failed": self.failed,
             "errors": self.errors, "mismatches": self.checker.mismatches,
             "lost_drains": self.lost_drains,
@@ -428,7 +488,8 @@ def main(argv: list[str]) -> int:
     env = rec["env"]
     print(f"# {args.workload} seed={args.seed} cores={env['cores']} heap={env['driver_mem']} "
           f"spark={env['spark']} python={env['python']} passes={rec['passes']} "
-          f"queries={len(rec['queries'])} calib_s={env['calib_s']['total']:.3f}")
+          f"queries={len(rec['queries'])} calib_s={env['calib_s']['total']:.3f} "
+          f"probe_slowdown={rec['probe_slowdown']:.3f}")
     print(f"# fail_frac {rec['failed'] / max(1, rec['attempted']):.4f} "
           f"({rec['failed']} of {rec['attempted']})")
     for name, why in list(rec["errors"].items()) + list(rec["mismatches"].items()):
