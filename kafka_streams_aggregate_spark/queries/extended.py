@@ -23,6 +23,11 @@ from kafka_streams_aggregate_spark.functions.money import (
     money_sum_sql,
 )
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain,
+    stage_two_batch,
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 # Exact-decimal revenue term shared by the TPC-H shapes.
@@ -705,19 +710,10 @@ def q_embed_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "streaming-window", "topk"),
 )
 def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.sources.tables import stream_events
 
-    work = tempfile.mkdtemp(prefix="ksa_trending_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("ts", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 day"), "event_type")
@@ -726,12 +722,9 @@ def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        out = run_stream_committed(
-            agg, work, "append",
+        out = drain(
+            agg, work,
             "window_start timestamp, event_type string, n bigint",
         )
         w = Window.partitionBy("window_start").orderBy(
@@ -742,9 +735,6 @@ def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= 3)
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- TPC-H Q2/Q9/Q11/Q12/Q16/Q20 (adapted: no partsupp table in the ----
@@ -1729,24 +1719,12 @@ def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEP_OUT_SCHEMA,
         streaming_cep_matches,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cepstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         # Two time-split files (maxFilesPerTrigger=1, mtime order) give
         # per-user event-time order ACROSS batches — the ingest property
         # the cross-batch state carry depends on.
@@ -1756,31 +1734,12 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, event_type string, ts_us long",
         )
         matches = streaming_cep_matches(raw, _CEP_WINDOW_US)
-        committed = run_stream_committed(
-            matches, work, "append", CEP_OUT_SCHEMA
-        )
+        committed = drain(matches, work, CEP_OUT_SCHEMA)
         return (
             committed.groupBy("user_id")
             .agg(
@@ -1790,9 +1749,6 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2074,55 +2030,24 @@ def q_cep_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEPQ_OUT_SCHEMA,
         streaming_cep_quantified,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cepqstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, event_type string, ts_us long",
         )
         matches = streaming_cep_quantified(raw, _CEP_WINDOW_US)
-        committed = run_stream_committed(
-            matches, work, "append", CEPQ_OUT_SCHEMA
-        )
+        committed = drain(matches, work, CEPQ_OUT_SCHEMA)
         return (
             committed.groupBy("user_id")
             .agg(
@@ -2134,9 +2059,6 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2187,66 +2109,25 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sessionize", "streaming", "stateful"),
 )
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_OUT_SCHEMA,
         streaming_sessionize,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_sessstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long",
         )
-        committed = run_stream_committed(
-            streaming_sessionize(raw, 1800), work, "update",
-            SESSION_OUT_SCHEMA,
-        )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_sessions", "n_events", "max_session_events"
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        return drain(
+            streaming_sessionize(raw, 1800), work, SESSION_OUT_SCHEMA,
+            key="user_id",
+        ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -2757,54 +2638,27 @@ def q_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sessionize", "streaming", "stateful", "ttl"),
 )
 def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_TTL_OUT_SCHEMA,
         streaming_sessionize_ttl,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_sessttl_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long"
+            stage_two_batch(
+                base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+                "event_id long, user_id long, ts_us long",
             )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
             .withColumn("ts", F.timestamp_micros("ts_us"))
             .withWatermark("ts", "0 seconds")
         )
-        committed = run_stream_committed(
-            streaming_sessionize_ttl(raw, 1800), work, "append",
+        committed = drain(
+            streaming_sessionize_ttl(raw, 1800), work,
             SESSION_TTL_OUT_SCHEMA,
         )
         return (
@@ -2820,9 +2674,6 @@ def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -3341,64 +3192,25 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "timeseries", "stateful-fold"),
 )
 def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.ewma_stream import (
         EWMA_OUT_SCHEMA,
         streaming_ewma,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_ewmastream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long, value double",
         )
-        committed = run_stream_committed(
-            streaming_ewma(raw), work, "update", EWMA_OUT_SCHEMA
-        )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", "n_events", "ewma_last")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        return drain(
+            streaming_ewma(raw), work, EWMA_OUT_SCHEMA, key="user_id"
+        ).localCheckpoint(eager=True)
 
 
 @register(

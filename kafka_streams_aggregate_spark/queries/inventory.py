@@ -18,6 +18,12 @@ from kafka_streams_aggregate_spark.operators.inventory_fold import (
     latest_per_key,
 )
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
+    drain,
+    stage_file,
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table, stream_events
 
 ACTION_MAP_SQL = """
@@ -143,29 +149,14 @@ def q_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "stateful-agg", "streaming"),
 )
 def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.streaming.inventory_stream import (
         streaming_inventory_fold,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_stream_")
-    src = f"{work}/src"
-    # Stateful-query partitioning is pinned at checkpoint creation; the
-    # key cardinality here (~1.5k at sf0.1) doesn't justify 32 state
-    # stores + 32 Python workers per micro-batch, so pin a smaller
-    # count for this fresh-checkpoint run and restore afterwards.
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, value double"
-            ).parquet(src)
-        )
+    with workdir(spark, sf_dir) as work:
+        raw = spark.readStream.schema(
+            "event_id long, user_id long, event_type string, value double"
+        ).parquet(f"{work}/src")
         updates = raw.select(
             F.col("user_id").cast("string").alias("product_code"),
             F.col("event_id").alias("seq"),
@@ -175,26 +166,11 @@ def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("action"),
             F.floor("value").cast("int").alias("delta"),
         )
-        folded = streaming_inventory_fold(updates)
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
-        committed = run_stream_committed(
-            folded, work, "update", "product_code string, count bigint"
-        )
-        # Changelog contract: latest batch wins per key. localCheckpoint
-        # materializes executor-side before the work dir is removed.
-        w = Window.partitionBy("product_code").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("product_code", "count")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        # Changelog contract: latest batch wins per key.
+        return drain(
+            streaming_inventory_fold(updates), work,
+            "product_code string, count bigint", key="product_code",
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -220,17 +196,8 @@ def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "streaming", "streaming-window"),
 )
 def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_winstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("ts", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 day"), "event_type")
@@ -239,17 +206,9 @@ def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
-        return run_stream_committed(
-            agg, work, "append",
-            "window_start timestamp, event_type string, n bigint",
+        return drain(
+            agg, work, "window_start timestamp, event_type string, n bigint"
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -281,17 +240,8 @@ def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "streaming-window"),
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjoin_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("ts", "user_id", "value"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("ts", "user_id", "value"))
         cust = load_table(spark, "customer", sf_dir).select(
             "c_custkey", "c_nationkey"
         )
@@ -316,18 +266,11 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_units",
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
-        return run_stream_committed(
-            agg, work, "append",
+        return drain(
+            agg, work,
             "window_start timestamp, n_name string, n_events bigint, "
             "total_units bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -358,17 +301,10 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream"),
 )
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjn_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(
+            spark, f"{work}/src", ("event_id", "ts", "user_id", "event_type")
+        )
         clicks = (
             raw.filter(F.col("event_type") == "click")
             .select(
@@ -404,18 +340,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_seconds"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            joined, work, "append",
+        return drain(
+            joined, work,
             "click_id bigint, purchase_id bigint, user_id bigint, "
             "gap_seconds bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -505,17 +435,14 @@ def q_agg_inventory_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "streaming-window", "watermark"),
 )
 def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
     import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="ksa_sdedup_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
+    with workdir(spark) as work:
+        src = f"{work}/src"
+        os.makedirs(src)
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e2.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         raw = stream_events(spark, src, ("event_id", "ts", "event_type"))
         deduped = raw.withWatermark("ts", "7 days").dropDuplicatesWithinWatermark(
             ["event_id"]
@@ -527,17 +454,11 @@ def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            agg, work, "append",
+        return drain(
+            agg, work,
             "window_start timestamp, event_type string, n bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -581,9 +502,6 @@ def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "source", "streaming", "stateful-agg"),
 )
 def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         register_eventlog_source,
     )
@@ -592,10 +510,7 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_eventlog_source(spark)
-    work = tempfile.mkdtemp(prefix="ksa_evsrc_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with workdir(spark) as work:
         raw = (
             spark.readStream.format("eventlog")
             .option("path", f"{sf_dir}/events.parquet")
@@ -610,24 +525,10 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("action"),
             F.floor("value").cast("int").alias("delta"),
         )
-        folded = streaming_inventory_fold(updates)
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
-        committed = run_stream_committed(
-            folded, work, "update", "product_code string, count bigint"
-        )
-        w = Window.partitionBy("product_code").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("product_code", "count")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        return drain(
+            streaming_inventory_fold(updates), work,
+            "product_code string, count bigint", key="product_code",
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -663,23 +564,20 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "merge", "sink"),
 )
 def q_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
     import shutil
-    import tempfile
 
     from kafka_streams_aggregate_spark.operators.cdc_merge import merge_cdc_stream
     from kafka_streams_aggregate_spark.sources.tables import stream_events
 
-    work = tempfile.mkdtemp(prefix="ksa_cdcmerge_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
+    with workdir(spark) as work:
+        src = f"{work}/src"
+        os.makedirs(src)
         # Two source files -> with maxFilesPerTrigger=1, two micro-batches
         # whose key sets overlap: the second batch MUST merge against the
         # first's committed buckets for the result to be right.
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e2.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         raw = stream_events(
             spark, src, ("event_id", "user_id", "value"),
             options={"maxFilesPerTrigger": "1"},
@@ -709,44 +607,30 @@ def q_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
-def _stage_two_batch_log(spark: SparkSession, sf_dir: str, work: str) -> str:
+def _stage_two_batch_log(
+    spark: SparkSession, sf_dir: str, work: str, corr_user_id=None
+) -> str:
     """Stage the two-file CDC changelog on disk and return its path:
     file 1 is the full events log, file 2 a correction (user_id < 50,
-    seq offset +2e9, value +1000) whose LATER mtime makes an
-    oldest-first file stream read it second. The staged directory IS
-    the durable changelog — replay consumers re-read it from offset 0."""
-    import glob
-    import os
-    import shutil
-
-    from kafka_streams_aggregate_spark.sources.tables import load_table
-
-    src = f"{work}/src"
-    os.makedirs(src)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-    corr_dir = f"{work}/corr"
-    (
-        load_table(spark, "events", sf_dir)
-        .filter(F.col("user_id") < 50)
-        .select(
+    seq offset +2e9, value +1000; ``corr_user_id`` re-keys it) staged
+    second, so an oldest-first file stream reads it second. The staged
+    directory IS the durable changelog — replay consumers re-read it
+    from offset 0."""
+    events = load_table(spark, "events", sf_dir)
+    stage_file(events.select("event_id", "user_id", "value"), work, 0)
+    stage_file(
+        events.filter(F.col("user_id") < 50).select(
             (F.col("event_id") + 2_000_000_000).alias("event_id"),
-            "user_id",
+            (F.col("user_id") if corr_user_id is None else corr_user_id).alias(
+                "user_id"
+            ),
             (F.col("value") + 1000.0).alias("value"),
-        )
-        .coalesce(1)
-        .write.parquet(corr_dir)
+        ),
+        work, 1,
     )
-    [part] = glob.glob(f"{corr_dir}/part-*.parquet")
-    shutil.move(part, f"{src}/e2.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-    return src
+    return f"{work}/src"
 
 
 def _tag_cdc_stream(spark: SparkSession, src: str, options=None):
@@ -775,11 +659,15 @@ def _tag_cdc_stream(spark: SparkSession, src: str, options=None):
     )
 
 
-def _two_batch_cdc_source(spark: SparkSession, sf_dir: str, work: str):
+def _two_batch_cdc_source(
+    spark: SparkSession, sf_dir: str, work: str, corr_user_id=None
+):
     """Stage the two-micro-batch CDC changelog and return the tagged
     ``changes`` streaming DataFrame (one file per micro-batch) —
     the shared source of the time-travel / vacuum / MOR queries."""
-    return _tag_cdc_stream(spark, _stage_two_batch_log(spark, sf_dir, work))
+    return _tag_cdc_stream(
+        spark, _stage_two_batch_log(spark, sf_dir, work, corr_user_id)
+    )
 
 
 @register(
@@ -845,20 +733,14 @@ def _two_batch_cdc_source(spark: SparkSession, sf_dir: str, work: str):
     tags=("streaming", "cdc", "time-travel", "lakehouse"),
 )
 def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         manifest_versions,
         merge_cdc_stream,
         read_snapshot_as_of,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_timetravel_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         latest = merge_cdc_stream(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -893,9 +775,6 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("changed"),
         )
         return diff.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -942,9 +821,6 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "vacuum", "lakehouse"),
 )
 def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         manifest_versions,
         merge_cdc_stream,
@@ -952,11 +828,8 @@ def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_vacuum_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         merge_cdc_stream(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -983,9 +856,6 @@ def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1087,19 +957,13 @@ def q_compacted_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "cdc", "merge-on-read", "lakehouse"),
 )
 def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_snapshot,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cdcmor_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         out = merge_cdc_stream_mor(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -1121,9 +985,6 @@ def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1180,17 +1041,10 @@ def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream", "outer"),
 )
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjl_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(
+            spark, f"{work}/src", ("event_id", "ts", "user_id", "event_type")
+        )
         clicks = (
             raw.filter(F.col("event_type") == "click")
             .select(
@@ -1227,18 +1081,12 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_seconds"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            joined, work, "append",
+        return drain(
+            joined, work,
             "click_id bigint, purchase_id bigint, user_id bigint, "
             "gap_seconds bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1274,17 +1122,8 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "state-store", "ops"),
 )
 def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssread_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("event_id", "ts", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("event_id", "ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 day"), "event_type")
@@ -1297,10 +1136,6 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            _await_drained,
-        )
-
         _await_drained(q, 300)
         state = spark.read.format("statestore").load(f"{work}/ckpt")
         return (
@@ -1314,9 +1149,6 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1371,60 +1203,18 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "merge-on-read", "cdf"),
 )
 def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_changes,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_morcdf_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-        corr_dir = f"{work}/corr"
-        (
-            load_table(spark, "events", sf_dir)
-            .filter(F.col("user_id") < 50)
-            .select(
-                (F.col("event_id") + 2_000_000_000).alias("event_id"),
-                F.when(
-                    F.col("user_id") % 5 == 0, F.col("user_id") + 1_000_000
-                )
-                .otherwise(F.col("user_id"))
-                .alias("user_id"),
-                (F.col("value") + 1000.0).alias("value"),
-            )
-            .coalesce(1)
-            .write.parquet(corr_dir)
-        )
-        [part] = glob.glob(f"{corr_dir}/part-*.parquet")
-        shutil.move(part, f"{src}/e2.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
-        raw = stream_events(
-            spark, src, ("event_id", "user_id", "value"),
-            options={"maxFilesPerTrigger": "1"},
-        )
-        changes = raw.select(
-            "user_id",
-            F.col("event_id").alias("seq"),
-            F.when(
-                F.pmod(F.floor(F.col("value") * 10).cast("bigint"), F.lit(7))
-                == 0,
-                F.lit("D"),
-            )
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            "value",
+    with workdir(spark) as work:
+        # Every fifth corrected user is re-keyed to a fresh id: an insert.
+        changes = _two_batch_cdc_source(
+            spark, sf_dir, work,
+            corr_user_id=F.when(
+                F.col("user_id") % 5 == 0, F.col("user_id") + 1_000_000
+            ).otherwise(F.col("user_id")),
         )
         out = merge_cdc_stream_mor(
             changes, work,
@@ -1437,9 +1227,6 @@ def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             cdf.select("user_id", "seq", "value", "change_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1478,17 +1265,8 @@ def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "streaming-window", "hopping"),
 )
 def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_hopstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("ts", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "2 days", "1 day"), "event_type")
@@ -1497,17 +1275,11 @@ def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            agg, work, "append",
+        return drain(
+            agg, work,
             "window_start timestamp, event_type string, n bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1558,17 +1330,8 @@ def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session-window", "streaming-window"),
 )
 def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_sessnat_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("event_id", "ts", "user_id"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(spark, f"{work}/src", ("event_id", "ts", "user_id"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -1580,18 +1343,12 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            agg, work, "append",
+        return drain(
+            agg, work,
             "session_start timestamp, session_end timestamp, "
             "user_id bigint, n_events bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1648,17 +1405,10 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream", "outer"),
 )
 def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjf_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
+    with workdir(spark, sf_dir) as work:
+        raw = stream_events(
+            spark, f"{work}/src", ("event_id", "ts", "user_id", "event_type")
+        )
         clicks = (
             raw.filter(F.col("event_type") == "click")
             .select(
@@ -1689,17 +1439,11 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id",
             F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
 
-        return run_stream_committed(
-            joined, work, "append",
+        return drain(
+            joined, work,
             "click_id bigint, purchase_id bigint, user_id bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1869,18 +1613,12 @@ def q_fifo_cost_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "replay", "kappa", "lakehouse"),
 )
 def q_cdc_replay_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_snapshot,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_replay_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with workdir(spark) as work:
         ddl = "user_id bigint, seq bigint, op string, value double"
         log_dir = _stage_two_batch_log(spark, sf_dir, work)
 
@@ -1927,9 +1665,6 @@ def q_cdc_replay_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "replay_delta_batches"
             ),
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

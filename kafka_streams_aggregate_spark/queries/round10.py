@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain,
+    stage_two_batch,
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
     with_scan_parallelism,
@@ -2374,11 +2379,7 @@ def q_listagg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql-surface", "source", "xml"),
 )
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_xmlrt_")
-    try:
+    with workdir(spark, conf={}) as work:
         ev = load_table(spark, "events", sf_dir).select(
             "event_id", "user_id", "event_type"
         )
@@ -2399,8 +2400,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2409,33 +2408,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # update-mode changelog through the committed manifest sink, latest
 # batch wins, localCheckpoint BEFORE the temp workdir is removed)
 # --------------------------------------------------------------------------
-
-
-def _staged_two_batch(spark, base, split_col, cutoff, schema_ddl, work):
-    """Write base split at cutoff into two source files whose mtimes
-    order them, and return the readStream (1 file per trigger)."""
-    import glob
-    import os
-    import shutil
-
-    src = f"{work}/src"
-    os.makedirs(src)
-    for name, pred in (
-        ("e1", F.col(split_col) < cutoff),
-        ("e2", F.col(split_col) >= cutoff),
-    ):
-        tmp = f"{work}/{name}_dir"
-        base.filter(pred).coalesce(1).write.parquet(tmp)
-        [part] = glob.glob(f"{tmp}/part-*.parquet")
-        shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-    return (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
 
 
 @register(
@@ -2485,48 +2457,25 @@ def _staged_two_batch(spark, base, split_col, cutoff, schema_ddl, work):
     tags=("streaming", "changepoint", "stateful-fold"),
 )
 def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cusum_stream import (
         CUSUM_OUT_SCHEMA,
         streaming_cusum,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cusumstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        raw = _staged_two_batch(
-            spark, base, "ts_us", 1705363200000000,
-            "event_id long, user_id long, ts_us long, value double", work,
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,
+            "event_id long, user_id long, ts_us long, value double",
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        committed = run_stream_committed(
-            streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
-        )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_events", "cusum_last", "cusum_max", "n_alarms"
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        return drain(
+            streaming_cusum(raw), work, CUSUM_OUT_SCHEMA, key="user_id"
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -2597,22 +2546,12 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "inventory", "policy", "stateful-fold"),
 )
 def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.ss_stream import (
         SS_OUT_SCHEMA,
         streaming_ss_policy,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_ssstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with workdir(spark) as work:
         daily = (
             _daily_demand(spark, sf_dir)
             .where(F.col("product") % 16 == 0)
@@ -2624,25 +2563,12 @@ def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("qty")
             )
         )
-        raw = _staged_two_batch(
-            spark, daily, "d", 9300, "product long, d long, qty long", work
+        raw = stage_two_batch(
+            daily, work, "d", 9300, "product long, d long, qty long"
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        committed = run_stream_committed(
-            streaming_ss_policy(raw), work, "update", SS_OUT_SCHEMA
-        )
-        w = Window.partitionBy("product").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "product", "n_days", "lost_sales", "n_orders", "end_on_hand"
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        return drain(
+            streaming_ss_policy(raw), work, SS_OUT_SCHEMA, key="product"
+        ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -2013,14 +2016,9 @@ def q_aqe_coalesce_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dynamic_partition_overwrite(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_dpo_")
-    out = f"{work}/orders_part"
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with workdir(spark, conf=dynamic) as work:
+        out = f"{work}/orders_part"
         base = load_table(spark, "orders", sf_dir).select(
             F.col("o_orderkey").alias("ok"),
             F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)").alias(
@@ -2036,7 +2034,7 @@ def q_dynamic_partition_overwrite(
             .partitionBy("priority")
             .parquet(out)
         )
-        result = (
+        return (
             spark.read.parquet(out)
             .groupBy("priority")
             .agg(
@@ -2045,13 +2043,6 @@ def q_dynamic_partition_overwrite(
             )
             .localCheckpoint(eager=True)
         )
-        return result
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -1614,13 +1617,11 @@ def q_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "scan", "engine-surface", "partitioning"),
 )
 def q_scan_split_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_scan_split_")
-    out = f"{work}/orders_onefile"
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
+    split_bytes = "spark.sql.files.maxPartitionBytes"
+    # The baseline scan runs at the 128 MiB default; the conf is
+    # restored on exit whatever the split step sets it to.
+    with workdir(spark, conf={split_bytes: str(128 * 1024 * 1024)}) as work:
+        out = f"{work}/orders_onefile"
         base = load_table(spark, "orders", sf_dir).select(
             F.col("o_orderpriority").alias("priority"),
             F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)").alias(
@@ -1633,10 +1634,10 @@ def q_scan_split_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
         single = spark.read.parquet(out).rdd.getNumPartitions() == 1
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024))
+        spark.conf.set(split_bytes, str(8 * 1024))
         split_df = spark.read.parquet(out)
         was_split = split_df.rdd.getNumPartitions() >= 2
-        result = (
+        return (
             split_df.groupBy("priority")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1646,10 +1647,6 @@ def q_scan_split_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("scan_was_split", F.lit(was_split))
             .localCheckpoint(eager=True)
         )
-        return result
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1683,13 +1680,10 @@ def q_scan_split_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "scan", "engine-surface", "fault-tolerance"),
 )
 def q_corrupt_file_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_corrupt_")
-    out = f"{work}/orders_mix"
-    old = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
-    try:
+    ignore = "spark.sql.files.ignoreCorruptFiles"
+    # Fail-closed default first; the conf is restored on exit.
+    with workdir(spark, conf={ignore: "false"}) as work:
+        out = f"{work}/orders_mix"
         base = load_table(spark, "orders", sf_dir).select(
             F.col("o_orderpriority").alias("priority"),
             F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)").alias(
@@ -1699,14 +1693,13 @@ def q_corrupt_file_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.write.parquet(out)
         with open(f"{out}/part-corrupt.parquet", "wb") as f:
             f.write(b"PAR1this-is-not-a-parquet-file")
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", "false")
         fail_closed = False
         try:
             spark.read.parquet(out).count()
         except Exception:
             fail_closed = True
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-        result = (
+        spark.conf.set(ignore, "true")
+        return (
             spark.read.parquet(out)
             .groupBy("priority")
             .agg(
@@ -1717,10 +1710,6 @@ def q_corrupt_file_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("corrupt_skipped", F.lit(True))
             .localCheckpoint(eager=True)
         )
-        return result
-    finally:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", old)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
+    stage_file,
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 # The TVD cut timestamp (2024-01-16 UTC) — shared with q_source_token_tvd
@@ -242,32 +247,28 @@ def q_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="ksa_rocksdb_clog_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
-    confs = {
+    conf = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled": "true",
+        # A modest state-partition count for the drain: the vanilla
+        # driver session defaults to 200 shuffle partitions, which would
+        # make every microbatch a 200-task state stage over this
+        # events-sized input (the q_state_store_read precedent).
+        "spark.sql.shuffle.partitions": "16",
     }
-    # Pin a modest state-partition count for the drain: the vanilla
-    # driver session defaults to 200 shuffle partitions, which would
-    # make every microbatch a 200-task state stage over this
-    # events-sized input (the q_state_store_read precedent).
-    confs["spark.sql.shuffle.partitions"] = "16"
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
+    with workdir(spark, conf=conf) as work:
+        src, ckpt = f"{work}/src", f"{work}/ckpt"
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "event_type",
             F.expr("CAST(floor(value * 100) AS BIGINT)").alias("cents"),
         )
 
-        def drain():
+        def run_drain():
             q = (
                 spark.readStream.schema(
                     "event_id BIGINT, event_type STRING, cents BIGINT"
@@ -284,17 +285,15 @@ def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+            _await_drained(q, 300)
 
-        for k, v in confs.items():
-            spark.conf.set(k, v)
         base.where("event_id % 2 = 0").write.parquet(src)
-        drain()
+        run_drain()
         changelogs = bool(
             glob.glob(ckpt + "/state/**/*.changelog", recursive=True)
         )
         base.where("event_id % 2 = 1").write.mode("append").parquet(src)
-        drain()
+        run_drain()
         state = spark.read.format("statestore").load(ckpt)
         return (
             state.select(
@@ -305,10 +304,6 @@ def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("changelog_written", F.lit(changelogs))
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, v in old.items():
-            (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -364,61 +359,53 @@ def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "cbo", "engine-surface", "statistics"),
 )
 def q_cbo_stats_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_cbo_")
     tbl = "t_ksa_cbo_r14"
-    old_cbo = spark.conf.get("spark.sql.cbo.enabled")
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            load_table(spark, "orders", sf_dir)
-            .select("o_orderkey", "o_orderpriority", "o_totalprice")
-            .write.option("path", f"{work}/t")
-            .saveAsTable(tbl)
-        )
-        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        t = spark.table(tbl)
-        mn, mx = t.agg(F.min("o_orderkey"), F.max("o_orderkey")).collect()[0]
-        cut = mn + (mx - mn) // 4
+    with workdir(spark, conf={"spark.sql.cbo.enabled": "true"}) as work:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (
+                load_table(spark, "orders", sf_dir)
+                .select("o_orderkey", "o_orderpriority", "o_totalprice")
+                .write.option("path", f"{work}/t")
+                .saveAsTable(tbl)
+            )
+            spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
+            t = spark.table(tbl)
+            mn, mx = t.agg(F.min("o_orderkey"), F.max("o_orderkey")).collect()[0]
+            cut = mn + (mx - mn) // 4
 
-        def one(label: str, pred: str) -> DataFrame:
-            filt = t.where(pred)
-            st = filt._jdf.queryExecution().optimizedPlan().stats()
-            rc = st.rowCount()
-            est = int(str(rc.get())) if rc.isDefined() else None
-            agg = filt.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
-                .cast("bigint")
-                .alias("sum_cents"),
-            )
-            [row] = agg.collect()
-            act = row["n_rows"]
-            within = (
-                est is not None
-                and act > 0
-                and est <= 2 * act
-                and act <= 2 * est
-            )
-            return spark.createDataFrame(
-                [(label, act, row["sum_cents"], est is not None, within)],
-                "predicate STRING, n_rows BIGINT, sum_cents BIGINT,"
-                " est_present BOOLEAN, est_within_2x BOOLEAN",
-            )
+            def one(label: str, pred: str) -> DataFrame:
+                filt = t.where(pred)
+                st = filt._jdf.queryExecution().optimizedPlan().stats()
+                rc = st.rowCount()
+                est = int(str(rc.get())) if rc.isDefined() else None
+                agg = filt.agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                    F.sum(F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
+                    .cast("bigint")
+                    .alias("sum_cents"),
+                )
+                [row] = agg.collect()
+                act = row["n_rows"]
+                within = (
+                    est is not None
+                    and act > 0
+                    and est <= 2 * act
+                    and act <= 2 * est
+                )
+                return spark.createDataFrame(
+                    [(label, act, row["sum_cents"], est is not None, within)],
+                    "predicate STRING, n_rows BIGINT, sum_cents BIGINT,"
+                    " est_present BOOLEAN, est_within_2x BOOLEAN",
+                )
 
-        result = (
-            one("priority_eq", "o_orderpriority = '1-URGENT'")
-            .unionAll(one("orderkey_range", f"o_orderkey < {cut}"))
-            .localCheckpoint(eager=True)
-        )
-        return result
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", old_cbo)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(work, ignore_errors=True)
+            return (
+                one("priority_eq", "o_orderpriority = '1-URGENT'")
+                .unionAll(one("orderkey_range", f"o_orderkey < {cut}"))
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 # --------------------------------------------------------------------------
@@ -1954,37 +1941,30 @@ def q_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "bucketing", "pruning", "engine-surface"),
 )
 def q_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_bp_")
     tbl = "t_ksa_bucket_prune_r14"
-    conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(conf, "true")
-    try:
-        spark.conf.set(conf, "false")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            load_table(spark, "orders", sf_dir)
-            .select("o_custkey", "o_totalprice")
-            .write.bucketBy(8, "o_custkey")
-            .option("path", f"{work}/t")
-            .saveAsTable(tbl)
-        )
-        df = spark.table(tbl).filter(F.col("o_custkey") == 7)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        pruned = "SelectedBucketsCount: 1 out of 8" in plan
-        agg = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("sum_cents"),
-        ).withColumn("bucket_pruned", F.lit(pruned))
-        return agg.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(conf, prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(work, ignore_errors=True)
+    no_auto = {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    with workdir(spark, conf=no_auto) as work:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (
+                load_table(spark, "orders", sf_dir)
+                .select("o_custkey", "o_totalprice")
+                .write.bucketBy(8, "o_custkey")
+                .option("path", f"{work}/t")
+                .saveAsTable(tbl)
+            )
+            df = spark.table(tbl).filter(F.col("o_custkey") == 7)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            pruned = "SelectedBucketsCount: 1 out of 8" in plan
+            agg = df.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                F.sum(F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
+                .cast("bigint")
+                .alias("sum_cents"),
+            ).withColumn("bucket_pruned", F.lit(pruned))
+            return agg.localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 @register(
@@ -2052,42 +2032,29 @@ def q_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark", "engine-surface"),
 )
 def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
+    with workdir(spark, conf={"spark.sql.shuffle.partitions": "16"}) as work:
+        ckpt = f"{work}/ckpt"
 
-    work = tempfile.mkdtemp(prefix="ksa_wm_drop_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
-    os.makedirs(src)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        def ts(m):
+            return f"TIMESTAMP'2024-01-01 12:{m:02d}:00'"
 
-        def write_file(name, rows):
-            stage = f"{work}/stage_{name}"
-            spark.createDataFrame(rows, "ts TIMESTAMP, k STRING").coalesce(
-                1
-            ).write.mode("overwrite").parquet(stage)
-            part = glob.glob(stage + "/part-*.parquet")[0]
-            # one file per micro-batch; mtime (plus name order as the
-            # tiebreak) sequences maxFilesPerTrigger=1
-            shutil.copy(part, os.path.join(src, name + ".parquet"))
-            _time.sleep(1.1)
-
-        def t(m):
-            return datetime.datetime(2024, 1, 1, 12, m)
-
-        write_file("b1", [(t(0), "a"), (t(1), "a")])
-        write_file("b2", [(t(30), "b")])  # raises max event time to 12:30
-        write_file("b3", [(t(29), "c")])  # filtered by the 11:51 watermark
-        write_file("b4", [(t(2), "late")])  # below 12:20 -> dropped
+        # One file per micro-batch (maxFilesPerTrigger=1), in this order.
+        for seq, values in enumerate(
+            (
+                f"({ts(0)}, 'a'), ({ts(1)}, 'a')",
+                f"({ts(30)}, 'b')",  # raises max event time to 12:30
+                f"({ts(29)}, 'c')",  # filtered by the 11:51 watermark
+                f"({ts(2)}, 'late')",  # below 12:20 -> dropped
+            )
+        ):
+            stage_file(
+                spark.sql(f"SELECT * FROM (VALUES {values}) AS t(ts, k)"),
+                work, seq,
+            )
         q = (
             spark.readStream.schema("ts TIMESTAMP, k STRING")
             .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            .parquet(f"{work}/src")
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "5 minutes"), "k")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -2097,7 +2064,7 @@ def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drained(q, 300)
         dropped = sum(
             op["numRowsDroppedByWatermark"]
             for p in q.recentProgress
@@ -2116,9 +2083,6 @@ def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.operators import sketches as sk
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain,
+    stage_two_batch,
+    workdir,
+)
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
     with_scan_parallelism,
@@ -866,12 +871,8 @@ def q_ols_trend_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "schema", "evolution"),
 )
 def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     events = load_table(spark, "events", sf_dir)
-    work = tempfile.mkdtemp(prefix="ksa_schemaevo_")
-    try:
+    with workdir(spark, conf={}) as work:
         (
             events.filter(F.col("event_id") % 2 == 0)
             .select("user_id", "value")
@@ -896,11 +897,9 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("sum_cents"),
             )
-            .localCheckpoint(eager=True)  # survives the rmtree below
+            .localCheckpoint(eager=True)  # survives the workdir removal
         )
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1169,59 +1168,23 @@ def q_quantile_sketch_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "streaming", "stateful"),
 )
 def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
-
-    work = tempfile.mkdtemp(prefix="ksa_streamhll_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "user_id",
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "user_id long, event_type string, ts_us long",
         )
         regs_stream = (
             sk.hll_row_terms(raw, F.col("user_id"), F.col("event_type"))
             .groupBy("grp", "idx")
             .agg(F.max("r").alias("r"))
         )
-        committed = run_stream_committed(
-            regs_stream, work, "update", "grp string, idx int, r int"
-        )
-        w = Window.partitionBy("grp", "idx").orderBy(F.col("_batch").desc())
-        final_regs = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("grp", "idx", "r")
+        final_regs = drain(
+            regs_stream, work, "grp string, idx int, r int", key=["grp", "idx"]
         )
         return (
             sk.hll_summarize(final_regs)
@@ -1234,9 +1197,6 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1652,45 +1612,15 @@ _SQSK_NBINS = 1024  # events.value observed in [0, ~560]
     tags=("sketch", "percentile", "streaming", "stateful"),
 )
 def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
-
-    work = tempfile.mkdtemp(prefix="ksa_streamqsk_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_type",
             "value",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_type string, value double, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_type string, value double, ts_us long",
         )
         bin_col = F.least(
             F.floor(F.col("value") / F.lit(float(_SQSK_WIDTH))).cast(
@@ -1705,25 +1635,14 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        committed = run_stream_committed(
-            binned_stream, work, "update",
-            "event_type string, bin bigint, c bigint",
-        )
-        w = Window.partitionBy("event_type", "bin").orderBy(
-            F.col("_batch").desc()
-        )
-        final_bins = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "bin", "c")
+        final_bins = drain(
+            binned_stream, work, "event_type string, bin bigint, c bigint",
+            key=["event_type", "bin"],
         )
         return (
             sk.hist_quantile_recover(final_bins, "event_type", _SQSK_WIDTH)
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1766,11 +1685,7 @@ from kafka_streams_aggregate_spark.functions.money import (  # noqa: E402
     tags=("lakehouse", "pruning", "join"),
 )
 def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_dpp_")
-    try:
+    with workdir(spark, conf={}) as work:
         orders = load_table(spark, "orders", sf_dir)
         fact_path = f"{work}/orders_by_year"
         (
@@ -1795,8 +1710,6 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1836,23 +1749,20 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "bucketing", "lakehouse", "scale"),
 )
 def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
     import uuid
 
-    work = tempfile.mkdtemp(prefix="ksa_bucketed_")
     suffix = uuid.uuid4().hex[:8]
     t_orders = f"ksa_bkt_orders_{suffix}"
     t_cust = f"ksa_bkt_customer_{suffix}"
-    try:
-        joined = build_bucketed_join(
-            spark, sf_dir, work, t_orders, t_cust
-        )
-        return joined.localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_cust}")
-        shutil.rmtree(work, ignore_errors=True)
+    with workdir(spark, conf={}) as work:
+        try:
+            joined = build_bucketed_join(
+                spark, sf_dir, work, t_orders, t_cust
+            )
+            return joined.localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_cust}")
 
 
 def build_bucketed_join(
@@ -1994,12 +1904,8 @@ def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "csv", "formats", "audit"),
 )
 def q_csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_csv_")
-    out = f"{work}/csv"
-    try:
+    with workdir(spark, conf={}) as work:
+        out = f"{work}/csv"
         (
             load_table(spark, "lineitem", sf_dir)
             .select(
@@ -2039,8 +1945,6 @@ def q_csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2303,11 +2207,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "formats", "roundtrip"),
 )
 def q_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_fmt_")
-    try:
+    with workdir(spark, conf={}) as work:
         slice_df = load_table(spark, "lineitem", sf_dir).select(
             "l_orderkey",
             "l_linenumber",
@@ -2332,8 +2232,6 @@ def q_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(

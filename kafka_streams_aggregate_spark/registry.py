@@ -148,7 +148,7 @@ def load_all() -> dict[str, QueryDef]:
 # — the queue is restocked with Lepage, tests/test_r17_stage3.py);
 # wave 12 graduates streaming telemetry (q_stream_telemetry — the
 # progress feed as verified data, the LAST non-environment-gated
-# engine row; only transformWithState remains, protoshim-gated).
+# engine row).
 # Wave 13 graduates the staged r17 batch-3 operator (q_lepage);
 # wave 14 adds the fresh six (q_diebold_mariano,
 # q_variance_homogeneity, q_ewma_chart, q_brier_decomposition,
@@ -171,6 +171,44 @@ _TIER_2_CHANGED_THIS_ROUND = (
     # still exact) — re-sized to 200k x 50k / 16KB per the r14 note's
     # measured alternative; oracle cardinality changed, re-verify.
     "q_aqe_skew_join",
+)
+# The streaming queries moved onto the one workdir context and manifest
+# drain (sources/eventlog_source.py) this round; the two streaming names
+# in tier 3 stay there. They are tier 2 for the driver window and always
+# run in the per-query test nets, but unlike the names above they stay in
+# the rotation's slice base, so pinning them does not move the rotated
+# slice every other query is audited in.
+_TIER_2_STREAMING_DRAIN = (
+    "q_stream_static_join",
+    "q_stream_stream_join",
+    "q_stream_dedup_window",
+    "q_custom_source_inventory",
+    "q_cdc_merge_stream",
+    "q_time_travel_read",
+    "q_cdc_vacuum",
+    "q_cdc_merge_mor",
+    "q_stream_stream_left_join",
+    "q_state_store_read",
+    "q_cdc_mor_changes",
+    "q_hopping_window_stream",
+    "q_session_window_stream",
+    "q_stream_stream_full_join",
+    "q_cdc_replay_backfill",
+    "q_stream_topk_trending",
+    "q_cep_pattern_match_stream",
+    "q_cep_quantified_stream",
+    "q_sessionize_stream",
+    "q_sessionize_ttl_stream",
+    "q_ewma_stream",
+    "q_stream_hll_distinct",
+    "q_stream_quantile_sketch",
+    "q_cusum_stream",
+    "q_ss_policy_stream",
+    "q_rocksdb_changelog_restore",
+    "q_watermark_late_drop",
+    "q_sink_exactly_once",
+    "q_stream_dedup_watermark",
+    "q_stream_telemetry",
 )
 _TIER_3_CORE_PARITY = (
     "q_agg_inventory",
@@ -255,7 +293,12 @@ def ordered() -> dict[str, QueryDef]:
     prior_green = verified_in_prior_round()
     tiers = {
         name: t + 1
-        for t, names in enumerate((_TIER_2_CHANGED_THIS_ROUND, _TIER_3_CORE_PARITY))
+        for t, names in enumerate(
+            (
+                _TIER_2_CHANGED_THIS_ROUND + _TIER_2_STREAMING_DRAIN,
+                _TIER_3_CORE_PARITY,
+            )
+        )
         for name in names
     }
     missing = set(tiers) - set(all_q)
@@ -290,9 +333,14 @@ def _rotation(names: list[str], modulus: int) -> list[str]:
     upcoming = max((_round_number(p) for p in paths), default=0) + 1
     green = verified_in_prior_round()
     always = set(_TIER_2_CHANGED_THIS_ROUND) | set(_TIER_3_CORE_PARITY)
-    keep = [n for n in names if n not in green or n in always]
+    keep = {
+        n for n in names
+        if n not in green or n in always or n in _TIER_2_STREAMING_DRAIN
+    }
     rest = sorted(n for n in names if n in green and n not in always)
-    keep += [n for i, n in enumerate(rest) if i % modulus == upcoming % modulus]
+    keep.update(
+        n for i, n in enumerate(rest) if i % modulus == upcoming % modulus
+    )
     return sorted(keep)
 
 

@@ -18,9 +18,21 @@ closure rule).
 Read path stays Arrow-native: each partition slices the parquet row
 range and yields `pyarrow.RecordBatch`es, never per-row Python
 objects.
+
+The module also holds the one streaming drain every streaming query
+uses: ``workdir`` (scratch directory + scoped session conf),
+``stage_file`` (mtime-ordered source files) and ``drain`` (the
+batch-id-keyed manifest sink and its FAILFAST read-back).
 """
 
 from __future__ import annotations
+
+import contextlib
+import glob
+import json
+import os
+import shutil
+import tempfile
 
 
 def make_eventlog_source():
@@ -225,11 +237,33 @@ def register_eventlog_sink(spark) -> None:
     spark.dataSource.register(make_eventlog_sink())
 
 
-def read_eventlog_sink(spark, path: str):
-    """Read back ONLY committed output (manifest-listed files) as a
-    DataFrame of JSON lines — the consumer-side contract check."""
-    import glob
-    import json
+def drain_eventlog_sink(stream_df, work: str, timeout: int = 300) -> str:
+    """Drain a bounded (availableNow) streaming frame through the
+    ``eventlogsink`` Python sink into ``<work>/sinkout`` (checkpoint
+    ``<work>/sinkckpt``, so a second call resumes where the first
+    stopped) and return that path for ``read_eventlog_sink``."""
+    register_eventlog_sink(stream_df.sparkSession)
+    out = f"{work}/sinkout"
+    q = (
+        stream_df.writeStream.format("eventlogsink")
+        .option("path", out)
+        .option("checkpointLocation", f"{work}/sinkckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q, timeout)
+    return out
+
+
+def read_eventlog_sink(spark, path: str, schema: str):
+    """Read back ONLY committed ``eventlogsink`` output (manifest-listed
+    files) as a DataFrame of ``schema`` — the consumer-side contract
+    check. The sink serializes row values with ``str()``, so every
+    column is read as a string and cast to its declared type (the
+    string->timestamp/double casts are exact for the ``str()``
+    formats); a malformed line raises instead of reading as NULLs."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
 
     files = []
     for mf in sorted(glob.glob(f"{path}/manifest/*.json")):
@@ -238,14 +272,24 @@ def read_eventlog_sink(spark, path: str):
                 f"{path}/data/{e['file']}" for e in json.load(f)["files"]
             )
     if not files:
-        return spark.createDataFrame([], "dummy string")
-    return spark.read.json(files)
+        return spark.createDataFrame([], schema)
+    target = StructType.fromDDL(schema)
+    raw = (
+        spark.read.schema(
+            StructType([StructField(f.name, StringType()) for f in target])
+        )
+        .option("mode", "FAILFAST")
+        .json(files)
+    )
+    return raw.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target]
+    )
 
 
 def _await_drained(q, timeout: int) -> None:
     """awaitTermination(timeout) returns False when the query is STILL
-    RUNNING at the deadline. Silently proceeding would glob a partial
-    manifest set and present truncated results as committed-complete —
+    RUNNING at the deadline. Silently proceeding would read a partial
+    output (manifest set, state store or progress feed) as complete —
     fail loudly instead."""
     if not q.awaitTermination(timeout):
         try:
@@ -254,167 +298,158 @@ def _await_drained(q, timeout: int) -> None:
             pass
         raise TimeoutError(
             f"availableNow drain still running after {timeout}s; "
-            "refusing to read a partial manifest set"
+            "refusing to read a partial output"
         )
 
 
-def run_stream_committed(
-    stream_df,
-    work: str,
-    output_mode: str,
-    schema: str,
-    timeout: int = 300,
-    append_via: str = "foreachbatch",
-):
-    """Drain a bounded (availableNow) streaming frame through the
-    two-phase-commit manifest sink and return ONLY committed rows as a
-    batch DataFrame — the 100 TB-shaped replacement for
-    ``foreachBatch`` + ``collect()`` test adapters: every row goes
-    executor -> files -> manifest -> (distributed) read-back; the
-    driver touches file names, never data.
+# Default conf scoped to a streaming query's work: the stateful-operator
+# partition count is pinned at checkpoint creation, and these fresh,
+# small-keyed drains don't justify one state store and one Python
+# worker per session-default shuffle partition per micro-batch.
+STREAM_CONF = {"spark.sql.shuffle.partitions": "8"}
 
-    ``append`` mode defaults to ``foreachBatch`` + a DISTRIBUTED JVM
-    ``batch_df.write.json`` per micro-batch with an atomic per-batch
-    manifest alongside (idempotent by batchId, Spark's own
-    FileCommitProtocol supplying task-level atomicity) — the same
-    mechanism ``update`` mode has always used. r17-opt (guide §4):
-    this was previously the ``eventlogsink`` Python DataSource for all
-    ~40 streaming queries, which put a per-task Python writer round
-    trip in EVERY micro-batch; a fresh-JVM sink-isolation probe at
-    sf0.1 measured the tumbling-window drain at 3.6-4.6 s through the
-    Python sink vs 1.6-3.0 s through foreachBatch JVM json (~0.6
-    s/batch of pure Python-boundary cost), with identical committed
-    rows. ``append_via='datasource'`` keeps the Python-DataSource sink
-    path for the query whose DECLARED surface it is
-    (q_sink_exactly_once — the sink-side two-phase-commit engine
-    demo). Timestamps are written/read with an explicit microsecond
-    ``timestampFormat``: the JSON default truncates to millis.
 
-    ``update`` mode cannot use a Python stream sink at all (the Python
-    stream-sink capability layer is append-only). Update-mode results
-    carry a ``_batch`` column so the caller can apply the changelog's
-    latest-wins reduction.
+@contextlib.contextmanager
+def workdir(spark, sf_dir: str | None = None, conf: dict = STREAM_CONF):
+    """A scratch directory for one query, removed on exit, with ``conf``
+    set on the (shared) session for the duration and restored after.
+
+    With ``sf_dir`` the driver ``events.parquet`` is copied to
+    ``<work>/src/events.parquet``, the stream source directory. Results
+    must be materialized (``localCheckpoint(eager=True)``) INSIDE the
+    ``with`` block: anything still reading from the directory is gone
+    after it."""
+    work = tempfile.mkdtemp(prefix="ksa_work_")
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        if sf_dir is not None:
+            os.makedirs(f"{work}/src")
+            shutil.copy(f"{sf_dir}/events.parquet", f"{work}/src/events.parquet")
+        yield work
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def stage_file(df, work: str, seq: int) -> None:
+    """Write ``df`` as one parquet file in ``<work>/src`` whose name and
+    mtime are both ordered by ``seq``: a file stream with
+    ``maxFilesPerTrigger=1`` then reads the staged files one per
+    micro-batch in ``seq`` order — no sleeps between writes."""
+    stage = f"{work}/stage/{seq}"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    dst = f"{work}/src/{seq:05d}.parquet"
+    os.makedirs(f"{work}/src", exist_ok=True)
+    shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+    t = 1_700_000_000 + 10 * seq
+    os.utime(dst, (t, t))
+
+
+def stage_two_batch(base, work: str, split_col: str, cutoff, schema: str):
+    """Stage ``base`` split at ``cutoff`` on ``split_col`` as two files
+    (below the cutoff first) and return the stream reading them one
+    micro-batch each: per-key order ACROSS batches is the staged order,
+    the property cross-batch state carries depend on."""
+    stage_file(base.filter(base[split_col] < cutoff), work, 0)
+    stage_file(base.filter(base[split_col] >= cutoff), work, 1)
+    return (
+        base.sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{work}/src")
+    )
+
+
+_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"  # the JSON default is millis
+
+
+def drain(stream_df, work: str, schema: str, key=None, timeout: int = 300):
+    """Drain a bounded (availableNow) streaming frame and return ONLY
+    its committed rows as a batch DataFrame of ``schema``.
+
+    Every micro-batch is written by a distributed JVM ``write.json``
+    into its own directory, then an atomic per-batch manifest names it
+    (D-Streams' recipe: output idempotent and keyed by batch id — a
+    retried batch overwrites its own directory and manifest, so readers
+    see each batch once). The read-back takes exactly the
+    manifest-listed directories in one ``spark.read`` with an explicit
+    microsecond timestamp format and ``FAILFAST``: a missing directory
+    or a malformed file raises, it never reads as NULL-filled rows.
+
+    ``key`` (a column name or a list of them) selects update mode, the
+    reference's changelog: the result is then the latest batch's row
+    per key (Kafka Streams' update conflation). Without ``key`` the
+    query runs in append mode and every committed row is returned.
+    The caller materializes the result inside its ``workdir`` block.
     """
-    import glob
-    import json
-    import os
+    import functools
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    spark = stream_df.sparkSession
     out = f"{work}/sinkout"
-    ckpt = f"{work}/sinkckpt"
-    TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-    if output_mode == "append" and append_via == "foreachbatch":
-
-        def _sink(batch_df, bid):
-            # Distributed per-batch write + atomic manifest publish; a
-            # retried batch overwrites its own directory and manifest
-            # (idempotent by batchId), so readers see each batch once.
-            data_dir = f"{out}/data/{bid}"
-            batch_df.write.mode("overwrite").option(
-                "timestampFormat", TS_FMT
-            ).json(data_dir)
-            os.makedirs(f"{out}/manifest", exist_ok=True)
-            tmp = f"{out}/manifest/.{bid}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"batch": bid, "dir": data_dir}, fh)
-            os.replace(tmp, f"{out}/manifest/{bid}.json")
-
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    q = (
+        stream_df.writeStream.foreachBatch(
+            functools.partial(_commit_batch, out=out, tag_batch=key is not None)
         )
-        _await_drained(q, timeout)
-        dirs = []
-        for mf in sorted(
-            glob.glob(f"{out}/manifest/*.json"),
-            key=lambda p: int(os.path.basename(p).split(".")[0]),
-        ):
-            with open(mf) as fh:
-                dirs.append(json.load(fh)["dir"])
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return (
-            spark.read.schema(schema)
-            .option("timestampFormat", TS_FMT)
-            .json(dirs)
-        )
+        .outputMode("append" if key is None else "update")
+        .option("checkpointLocation", f"{work}/sinkckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q, timeout)
+    return _read_committed(stream_df.sparkSession, out, schema, key)
 
-    if output_mode == "append":
-        register_eventlog_sink(spark)
-        q = (
-            stream_df.writeStream.format("eventlogsink")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q, timeout)
-        files = []
-        for mf in sorted(glob.glob(f"{out}/manifest/*.json")):
-            with open(mf) as fh:
-                files.extend(
-                    f"{out}/data/{e['file']}" for e in json.load(fh)["files"]
-                )
-        if not files:
-            return spark.createDataFrame([], schema)
-        # The sink serializes row values with str(): read everything as
-        # strings, then cast to the declared schema (string->timestamp/
-        # double casts are exact for the str() formats).
-        target = StructType.fromDDL(schema)
-        raw = spark.read.schema(
-            StructType([StructField(f.name, StringType()) for f in target])
-        ).json(files)
-        return raw.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target]
-        )
 
-    if output_mode == "update":
+def _commit_batch(batch_df, bid: int, out: str, tag_batch: bool) -> None:
+    """``drain``'s foreachBatch sink: write batch ``bid`` into its own
+    directory, then publish its manifest atomically. Re-running it for
+    the same ``bid`` (a retried batch) overwrites both."""
+    from pyspark.sql import functions as F
 
-        def _sink(batch_df, bid):
-            # Distributed per-batch write + atomic manifest publish; a
-            # retried batch overwrites its own directory and manifest
-            # (idempotent by batchId), so readers see each batch once.
-            data_dir = f"{out}/data/{bid}"
-            batch_df.write.mode("overwrite").json(data_dir)
-            os.makedirs(f"{out}/manifest", exist_ok=True)
-            tmp = f"{out}/manifest/.{bid}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"batch": bid, "dir": data_dir}, fh)
-            os.replace(tmp, f"{out}/manifest/{bid}.json")
+    data_dir = f"{out}/data/{bid}"
+    if tag_batch:
+        batch_df = batch_df.withColumn("_batch", F.lit(bid).cast("bigint"))
+    batch_df.write.mode("overwrite").option("timestampFormat", _TS_FMT).json(
+        data_dir
+    )
+    os.makedirs(f"{out}/manifest", exist_ok=True)
+    tmp = f"{out}/manifest/.{bid}.json.tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"batch": bid, "dir": data_dir}, fh)
+    os.replace(tmp, f"{out}/manifest/{bid}.json")
 
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q, timeout)
-        parts = []
-        for mf in sorted(
-            glob.glob(f"{out}/manifest/*.json"),
-            key=lambda p: int(os.path.basename(p).split(".")[0]),
-        ):
-            with open(mf) as fh:
-                meta = json.load(fh)
-            parts.append(
-                spark.read.schema(schema)
-                .json(meta["dir"])
-                .withColumn("_batch", F.lit(meta["batch"]))
-            )
-        if not parts:
-            return spark.createDataFrame([], f"{schema}, _batch int")
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+
+def _read_committed(spark, out: str, schema: str, key=None):
+    """The read-back half of ``drain``: the manifest-listed batch
+    directories under ``out``, reduced to the latest batch per ``key``
+    when one is given."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    dirs = []
+    for mf in sorted(
+        glob.glob(f"{out}/manifest/*.json"),
+        key=lambda p: int(os.path.basename(p).split(".")[0]),
+    ):
+        with open(mf) as fh:
+            dirs.append(json.load(fh)["dir"])
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    df = (
+        spark.read.schema(schema if key is None else f"{schema}, _batch bigint")
+        .option("timestampFormat", _TS_FMT)
+        .option("mode", "FAILFAST")
+        .json(dirs)
+    )
+    if key is None:
         return df
-
-    raise ValueError(f"unsupported output mode: {output_mode}")
+    keys = [key] if isinstance(key, str) else list(key)
+    latest = Window.partitionBy(*keys).orderBy(F.col("_batch").desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(latest))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_batch")
+    )

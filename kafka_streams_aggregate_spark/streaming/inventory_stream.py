@@ -32,92 +32,6 @@ OUTPUT_SCHEMA = "product_code string, count bigint"
 STATE_SCHEMA = "count bigint"
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs a google.protobuf runtime for
-    its worker<->JVM state protocol. Where the protobuf wheel is absent
-    the vendored pure-Python shim (``protoshim.ensure_protobuf``)
-    satisfies it — but only if the SparkSession was built by our
-    ``session.get_spark`` (the shim must be on PYTHONPATH *before* the
-    JVM boots so spawned Python workers inherit it). Under a foreign
-    vanilla session with no protobuf wheel, the import below still
-    succeeds driver-side but workers would fail — which is why this
-    variant stays a tested alternate path and the registered streaming
-    queries use ``applyInPandasWithState``."""
-    from kafka_streams_aggregate_spark.protoshim import ensure_protobuf
-
-    ensure_protobuf()
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_inventory_fold_tws(updates: DataFrame) -> DataFrame:
-    """Spark >= 4.0 variant of the fold on the transformWithState API
-    (StatefulProcessor + typed ValueState). Functionally identical to
-    ``streaming_inventory_fold``; requires the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass``) and the
-    protobuf runtime (see ``_tws_available``).
-
-    The newer API buys: typed state handles (ValueState/ListState/
-    MapState), per-key timers, and state schema evolution — the
-    features a long-lived 100 TB-scale deployment eventually needs.
-    """
-    if not _tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not available in this environment; use "
-            "streaming_inventory_fold (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # Self-contained class (pickled by value) — same rule as the
-    # applyInPandasWithState closure below.
-    class InventoryFoldProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", "count bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            count = self._count.get()[0] if self._count.exists() else 0
-            chunks = list(rows)
-            batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            batch = batch.sort_values("seq")
-            for action, delta in zip(batch["action"], batch["delta"]):
-                if pd.isna(delta) or action is None:
-                    continue
-                d = int(delta)
-                if action == "INC":
-                    count += d
-                elif action == "DEC":
-                    count -= d
-                elif action == "REP":
-                    count = d
-            self._count.update((count,))
-            yield pd.DataFrame({"product_code": [key[0]], "count": [count]})
-
-        def close(self) -> None:
-            pass
-
-    valid = updates.filter(
-        F.col("delta").isNotNull()
-        & F.col("action").isNotNull()
-        & F.col("action").isin("INC", "DEC", "REP")
-    )
-    return valid.groupBy("product_code").transformWithStateInPandas(
-        InventoryFoldProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_inventory_fold(updates: DataFrame, strict: bool = False) -> DataFrame:
     """Continuous keyed INC/DEC/REP fold over a streaming DataFrame of
     ``(product_code, seq, action, delta)``. Returns the update-mode

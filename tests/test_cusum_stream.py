@@ -62,16 +62,12 @@ def test_reflection_identity(ds):
 
 
 def test_cusum_stream_parity_sf0001(spark):
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_two_batch,
+        workdir,
     )
     from kafka_streams_aggregate_spark.sources.tables import load_table
     from kafka_streams_aggregate_spark.streaming.cusum_stream import (
@@ -79,53 +75,20 @@ def test_cusum_stream_parity_sf0001(spark):
         streaming_cusum,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cusumstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
+    with workdir(spark) as work:
         base = load_table(spark, "events", SF).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = stage_two_batch(
+            base, work, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long, value double",
         )
-        committed = run_stream_committed(
-            streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
-        )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        got_df = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_events", "cusum_last", "cusum_max", "n_alarms"
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
+        got_df = drain(
+            streaming_cusum(raw), work, CUSUM_OUT_SCHEMA, key="user_id"
+        ).localCheckpoint(eager=True)
 
     got = (
         got_df.toPandas().sort_values("user_id").reset_index(drop=True)

@@ -14,6 +14,7 @@ import time
 import pytest
 
 from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
     register_eventlog_source,
 )
 
@@ -50,7 +51,7 @@ def test_available_now_drains_in_one_batch(evsource):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     assert sum(n for _, n in batches) == TOTAL
     assert len(batches) == 1
 
@@ -96,7 +97,7 @@ def test_schema_and_micros_truncation(evsource):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     from kafka_streams_aggregate_spark.sources.tables import load_table
 
     batch = (
@@ -137,9 +138,13 @@ def test_sink_manifest_commit_roundtrip(evsource, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
 
-    back = read_eventlog_sink(spark, out)
+    schema = (
+        "event_id bigint, ts_us bigint, user_id bigint, event_type string, "
+        "value double"
+    )
+    back = read_eventlog_sink(spark, out, schema)
     assert back.count() == TOTAL
     # Content fidelity on a sample key.
     row = back.filter("event_id = 7").collect()[0]
@@ -155,7 +160,7 @@ def test_sink_manifest_commit_roundtrip(evsource, tmp_path):
     # appear to manifest readers.
     with open(f"{out}/data/9-deadbeef.jsonl", "w") as f:
         f.write('{"event_id": 999999}\n')
-    assert read_eventlog_sink(spark, out).count() == TOTAL
+    assert read_eventlog_sink(spark, out, schema).count() == TOTAL
 
 def test_full_topology_source_topic_fold(evsource, tmp_path):
     """The reference application end-to-end, as the two-job chain a
@@ -202,13 +207,10 @@ def test_full_topology_source_topic_fold(evsource, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_drained(q, 180)
 
-    consumed = read_eventlog_sink(spark, out).select(
-        "product_code",
-        F.col("seq").cast("long").alias("seq"),
-        "action",
-        F.col("delta").cast("int").alias("delta"),
+    consumed = read_eventlog_sink(
+        spark, out, "product_code string, seq bigint, action string, delta int"
     )
     got = {
         r["product_code"]: int(r["count"])

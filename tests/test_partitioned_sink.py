@@ -62,67 +62,62 @@ def test_partitioned_roundtrip_counts(spark, partitioned_dir):
     )
 
 
-def test_run_stream_committed_append_roundtrip(spark, tmp_path):
-    # Default append path (r17): foreachBatch + distributed JVM json +
-    # per-batch manifest. Only manifest-listed batch dirs count.
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
+def _drain_ids(spark, tmp_path):
+    """Drain 100 ids with their id % 7 bucket through ``drain``."""
+    from kafka_streams_aggregate_spark.sources.eventlog_source import drain
 
     src = str(tmp_path / "src")
     spark.range(100).selectExpr(
         "id", "CAST(id % 7 AS STRING) AS bucket"
     ).write.parquet(src)
     stream = spark.readStream.schema("id long, bucket string").parquet(src)
-    out = run_stream_committed(
-        stream, str(tmp_path / "w"), "append", "id bigint, bucket string"
-    )
-    rows = {r["id"]: r["bucket"] for r in out.collect()}
-    assert len(rows) == 100 and rows[13] == "6"
+    return drain(stream, str(tmp_path / "w"), "id bigint, bucket string")
+
+
+def _manifests(work):
     import glob
+
+    return sorted(glob.glob(f"{work}/sinkout/manifest/*.json"))
+
+
+def test_drain_append_roundtrip(spark, tmp_path):
+    # Append mode: foreachBatch + distributed JVM json + per-batch
+    # manifest. Only manifest-listed batch dirs count.
     import json
 
-    outdir = str(tmp_path / "w" / "sinkout")
-    manifests = glob.glob(f"{outdir}/manifest/*.json")
-    assert manifests, "foreachBatch append path must publish manifests"
+    out = _drain_ids(spark, tmp_path)
+    rows = {r["id"]: r["bucket"] for r in out.collect()}
+    assert len(rows) == 100 and rows[13] == "6"
+    manifests = _manifests(str(tmp_path / "w"))
+    assert manifests, "the drain must publish manifests"
     for mf in manifests:
         meta = json.load(open(mf))
         assert "dir" in meta and "batch" in meta
 
 
-def test_run_stream_committed_append_datasource_path(spark, tmp_path):
-    # append_via='datasource' keeps the Python-DataSource sink surface
-    # (q_sink_exactly_once's declared demo): per-task .jsonl files, a
-    # per-batch manifest listing exactly the committed files, and
-    # committed rows identical to the default path.
+def test_drain_matches_eventlog_sink(spark, tmp_path):
+    # The Python-DataSource sink (q_sink_exactly_once's declared
+    # surface): per-task .jsonl files, a per-batch manifest listing
+    # exactly the committed files, and committed rows identical to
+    # the drain's.
+    import glob
+    import json
+
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain_eventlog_sink,
+        read_eventlog_sink,
     )
 
-    src = str(tmp_path / "src")
-    spark.range(100).selectExpr(
-        "id", "CAST(id % 7 AS STRING) AS bucket"
-    ).write.parquet(src)
-
-    def drain(workdir, via):
-        stream = spark.readStream.schema(
-            "id long, bucket string"
-        ).parquet(src)
-        return run_stream_committed(
-            stream, workdir, "append", "id bigint, bucket string",
-            append_via=via,
-        )
-
-    out_ds = drain(str(tmp_path / "wds"), "datasource")
-    out_fb = drain(str(tmp_path / "wfb"), "foreachbatch")
+    out_fb = _drain_ids(spark, tmp_path)
+    stream = spark.readStream.schema("id long, bucket string").parquet(
+        str(tmp_path / "src")
+    )
+    outdir = drain_eventlog_sink(stream, str(tmp_path / "ds"))
+    out_ds = read_eventlog_sink(spark, outdir, "id bigint, bucket string")
     rows_ds = sorted((r["id"], r["bucket"]) for r in out_ds.collect())
     rows_fb = sorted((r["id"], r["bucket"]) for r in out_fb.collect())
     assert rows_ds == rows_fb and len(rows_ds) == 100
     # Only manifest-listed files count: every data file must be listed.
-    import glob
-    import json
-
-    outdir = str(tmp_path / "wds" / "sinkout")
     listed = set()
     for mf in glob.glob(f"{outdir}/manifest/*.json"):
         listed.update(e["file"] for e in json.load(open(mf))["files"])
@@ -130,57 +125,57 @@ def test_run_stream_committed_append_datasource_path(spark, tmp_path):
     assert on_disk == listed
 
 
-def test_run_stream_committed_append_timestamp_micros(spark, tmp_path):
+def test_drain_append_timestamp_micros(spark, tmp_path):
     # The JSON default truncates timestamps to millis on write; the
-    # foreachBatch append path must roundtrip MICROsecond precision
-    # (explicit timestampFormat on both sides).
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
+    # drain must roundtrip MICROsecond precision (explicit
+    # timestampFormat on both sides).
+    from kafka_streams_aggregate_spark.sources.eventlog_source import drain
 
     src = str(tmp_path / "src")
     spark.sql(
         "SELECT timestamp_micros(1705363200123456) AS ts, 1 AS k"
     ).write.parquet(src)
     stream = spark.readStream.schema("ts timestamp, k int").parquet(src)
-    out = run_stream_committed(
-        stream, str(tmp_path / "w"), "append", "ts timestamp, k int"
-    )
+    out = drain(stream, str(tmp_path / "w"), "ts timestamp, k int")
     [row] = out.collect()
     assert row["ts"].microsecond == 123456
 
 
-def test_run_stream_committed_update_latest_wins(spark, tmp_path):
+def test_drain_update_latest_wins(spark, tmp_path):
+    # Update mode (a key is given): two micro-batches update the same
+    # keys; the result is the latest batch's row per key, with no
+    # batch-id column left over.
+    from pyspark.sql import functions as F
+
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_file,
     )
 
-    src = str(tmp_path / "src")
-    spark.range(50).selectExpr("id % 5 AS k", "id AS v").write.parquet(src)
+    work = str(tmp_path / "w")
+    stage_file(spark.range(50).selectExpr("id % 5 AS k", "id AS v"), work, 0)
+    stage_file(spark.range(50, 53).selectExpr("id % 5 AS k", "id AS v"), work, 1)
     stream = (
         spark.readStream.schema("k long, v long")
-        .parquet(src)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{work}/src")
         .groupBy("k")
-        .agg({"v": "max"})
-        .withColumnRenamed("max(v)", "v")
+        .agg(F.max("v").alias("v"))
     )
-    out = run_stream_committed(
-        stream, str(tmp_path / "w"), "update", "k bigint, v bigint"
-    )
-    assert "_batch" in out.columns
-    rows = {r["k"]: r["v"] for r in out.collect()}
-    assert rows == {0: 45, 1: 46, 2: 47, 3: 48, 4: 49}
+    out = drain(stream, work, "k bigint, v bigint", key="k")
+    assert out.columns == ["k", "v"]
+    rows = sorted((r["k"], r["v"]) for r in out.collect())
+    assert rows == [(0, 50), (1, 51), (2, 52), (3, 48), (4, 49)]
+    assert len(_manifests(work)) == 2  # genuinely two batches
 
 
-def test_run_stream_committed_empty_stream(spark, tmp_path):
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
+def test_drain_empty_stream(spark, tmp_path):
+    from kafka_streams_aggregate_spark.sources.eventlog_source import drain
 
     src = str(tmp_path / "src")
     spark.range(10).selectExpr("id").filter("id < 0").write.parquet(src)
     stream = spark.readStream.schema("id long").parquet(src)
-    out = run_stream_committed(stream, str(tmp_path / "w"), "append", "id bigint")
+    out = drain(stream, str(tmp_path / "w"), "id bigint")
     assert out.count() == 0 and out.schema.simpleString() == "struct<id:bigint>"
 
 
@@ -190,54 +185,137 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     of batch 0 appear exactly once in the combined manifests even
     though the first file is still in the source directory, and batch
     ids continue instead of restarting."""
-    import glob
-    import json
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    work = str(tmp_path / "w")
-    src = f"{work}/src"
-    os.makedirs(src)
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_file,
     )
 
-    def stage(n_lo, n_hi, name, mtime):
-        spark.range(n_lo, n_hi).select(
-            F.col("id").alias("event_id"),
-            (F.col("id") % 7).alias("k"),
-        ).coalesce(1).write.parquet(f"{work}/{name}_stage")
-        [part] = glob.glob(f"{work}/{name}_stage/part-*.parquet")
-        shutil.move(part, f"{src}/{name}.parquet")
-        os.utime(f"{src}/{name}.parquet", (mtime, mtime))
+    work = str(tmp_path / "w")
+
+    def stage(n_lo, n_hi, seq):
+        stage_file(
+            spark.range(n_lo, n_hi).select(
+                F.col("id").alias("event_id"),
+                (F.col("id") % 7).alias("k"),
+            ),
+            work, seq,
+        )
 
     def run():
         stream = spark.readStream.schema("event_id bigint, k bigint").parquet(
-            src
+            f"{work}/src"
         )
-        return run_stream_committed(
-            stream.select("event_id", "k"), work, "append",
-            "event_id bigint, k bigint",
-        )
+        return drain(stream, work, "event_id bigint, k bigint")
 
-    stage(0, 100, "f1", 1_700_000_000)
+    stage(0, 100, 0)
     first = run()
     assert first.count() == 100
 
-    stage(100, 150, "f2", 1_700_000_100)
+    stage(100, 150, 1)
     both = run()  # SAME work dir: same checkpoint, same sink manifests
     # Exactly once: 150 rows total, every event_id distinct, despite
-    # f1.parquet still sitting in src on the second run.
+    # the first file still sitting in src on the second run.
     assert both.count() == 150
     assert both.select("event_id").distinct().count() == 150
     # Batch ids continued: two committed manifests, not a restart at 0.
-    manifests = sorted(
-        os.path.basename(p)
-        for p in glob.glob(f"{work}/sinkout/manifest/*.json")
+    assert len(_manifests(work)) == 2
+
+
+# --- Fault injection: the manifest contract gives the exact rows or a
+# --- loud error, never NULL-filled rows.
+
+
+def test_retried_batch_id_overwrites_to_exact_rows(spark, tmp_path):
+    # A retried micro-batch re-runs the sink with the SAME batch id and
+    # possibly different partitioning: its directory and manifest are
+    # overwritten, so the read-back holds that batch once.
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        _commit_batch,
+        _read_committed,
     )
-    assert len(manifests) == 2, manifests
+
+    out = str(tmp_path / "sinkout")
+    rows = spark.range(20).selectExpr("id", "id * 2 AS v")
+    _commit_batch(rows.repartition(3), 0, out=out, tag_batch=False)
+    _commit_batch(rows.repartition(5), 0, out=out, tag_batch=False)  # retry
+    _commit_batch(spark.range(20, 25).selectExpr("id", "id * 2 AS v"), 1,
+                  out=out, tag_batch=False)
+    back = _read_committed(spark, out, "id bigint, v bigint")
+    assert sorted(tuple(r) for r in back.collect()) == [
+        (i, 2 * i) for i in range(25)
+    ]
+
+
+def test_truncated_data_file_raises(spark, tmp_path):
+    # A committed data file cut mid-record must fail the read-back; a
+    # PERMISSIVE read would return the broken record as a NULL row.
+    import glob
+    import os
+
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        _commit_batch,
+        _read_committed,
+    )
+
+    out = str(tmp_path / "sinkout")
+    _commit_batch(
+        spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s").coalesce(1),
+        0, out=out, tag_batch=False,
+    )
+    [part] = glob.glob(f"{out}/data/0/part-*.json")
+    with open(part, "rb") as fh:
+        data = fh.read()
+    with open(part, "wb") as fh:
+        fh.write(data[: len(data) - 7])  # cut inside the last record
+    # Object stores keep no .crc sidecars: the parse mode alone must
+    # catch the damage, not the local filesystem's checksum.
+    for crc in glob.glob(f"{out}/data/0/.*.crc"):
+        os.remove(crc)
+    with pytest.raises(Exception, match="(?i)malformed"):
+        _read_committed(spark, out, "id bigint, s string").collect()
+
+
+def test_manifest_listing_missing_dir_raises(spark, tmp_path):
+    # A manifest naming a batch directory that is gone (lost or
+    # vacuumed data) must fail, not read as an empty batch.
+    import shutil
+
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        _commit_batch,
+        _read_committed,
+    )
+
+    out = str(tmp_path / "sinkout")
+    for bid in (0, 1):
+        _commit_batch(spark.range(bid * 5, bid * 5 + 5), bid, out=out,
+                      tag_batch=False)
+    shutil.rmtree(f"{out}/data/1")
+    with pytest.raises(Exception, match="(?i)path does not exist|PATH_NOT_FOUND"):
+        _read_committed(spark, out, "id bigint").collect()
+
+
+def test_drain_timeout_raises(spark, tmp_path):
+    # A drain still running at its deadline raises TimeoutError (and
+    # stops the query) instead of reading a partial manifest set.
+    import time
+
+    from kafka_streams_aggregate_spark.sources.eventlog_source import drain
+
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "src")
+    spark.range(2).coalesce(1).write.parquet(src)
+    nap = F.udf(lambda i: time.sleep(3) or i, "long")
+    slow = spark.readStream.schema("id long").parquet(src).select(
+        nap("id").alias("id")
+    )
+    start = time.time()
+    with pytest.raises(TimeoutError, match="still running"):
+        drain(slow, str(tmp_path / "w"), "id bigint", timeout=1)
+    assert time.time() - start < 60
+    assert not any(q.isActive for q in spark.streams.active)
 
 
 def test_dynamic_partition_overwrite_touches_only_written_partitions(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from kafka_streams_aggregate_spark.registry import (
     _TIER_2_CHANGED_THIS_ROUND,
+    _TIER_2_STREAMING_DRAIN,
     _TIER_3_CORE_PARITY,
     load_all,
     ordered,
@@ -60,7 +61,9 @@ def test_priority_tiers_inside_snapshot_window():
     would leave changes and the reference-parity core unchecked."""
     names = list(ordered())
     window = set(names[:SNAPSHOT_SLOTS])
-    pinned = (*_TIER_2_CHANGED_THIS_ROUND, *_TIER_3_CORE_PARITY)
+    pinned = (
+        *_TIER_2_CHANGED_THIS_ROUND, *_TIER_2_STREAMING_DRAIN, *_TIER_3_CORE_PARITY
+    )
     displaced = [n for n in pinned if n not in window]
     assert not displaced, (
         f"priority queries displaced from the snapshot window: {displaced}"
@@ -73,7 +76,11 @@ def test_never_verified_debt_fits_one_round():
     verification — cap new registrations per round accordingly."""
     prior = verified_in_prior_round()
     never = [n for n in load_all() if n not in prior]
-    pinned = set(_TIER_2_CHANGED_THIS_ROUND) | set(_TIER_3_CORE_PARITY)
+    pinned = (
+        set(_TIER_2_CHANGED_THIS_ROUND)
+        | set(_TIER_2_STREAMING_DRAIN)
+        | set(_TIER_3_CORE_PARITY)
+    )
     demand = len(set(never) | pinned)
     assert demand <= SNAPSHOT_SLOTS, (
         f"{len(never)} never-verified + {len(pinned)} pinned queries "

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.operators.observe import observe, peek_rows
 from kafka_streams_aggregate_spark.plans.inspect import count_exchanges
+from kafka_streams_aggregate_spark.sources.eventlog_source import _await_drained
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -132,74 +133,7 @@ def test_streaming_fold_on_rocksdb_state_store(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        assert dict(collected) == python_fold_oracle(rows)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_transform_with_state_fold_matches_oracle(spark, tmp_path):
-    """The Spark-4 transformWithState variant of the fold (typed
-    ValueState on RocksDB) produces the same results as the
-    applyInPandasWithState path and the Python oracle. Skipped where
-    the protobuf runtime the API depends on is absent."""
-    import random
-
-    import pytest as _pytest
-
-    from kafka_streams_aggregate_spark.operators.inventory_fold import (
-        python_fold_oracle,
-    )
-    from kafka_streams_aggregate_spark.schemas import INVENTORY_UPDATE_FLAT_SCHEMA
-    from kafka_streams_aggregate_spark.streaming.inventory_stream import (
-        _tws_available,
-        streaming_inventory_fold_tws,
-    )
-
-    if not _tws_available():
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_inventory_fold_tws(
-                spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA).parquet(
-                    str(tmp_path)
-                )
-            )
-        _pytest.skip("google.protobuf absent: transformWithState gated off")
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        rng = random.Random(31)
-        rows = [
-            (f"key{k}", s, rng.choice(["INC", "DEC", "REP"]), rng.randint(1, 10))
-            for k in range(4)
-            for s in range(6)
-        ]
-        df = spark.createDataFrame(rows, schema=INVENTORY_UPDATE_FLAT_SCHEMA)
-        src = str(tmp_path / "src")
-        df.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA).parquet(src)
-        collected = []
-
-        def _sink(batch_df, _bid):
-            collected.extend(
-                (r["product_code"], r["count"]) for r in batch_df.collect()
-            )
-
-        q = (
-            streaming_inventory_fold_tws(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
         assert dict(collected) == python_fold_oracle(rows)
     finally:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
@@ -214,12 +148,11 @@ def test_streaming_cep_match_straddles_batch_boundary(spark, tmp_path):
     # view+click arrive in micro-batch 1, purchase in micro-batch 2:
     # only the carried last-2-events state can complete the run. A
     # batch-local matcher would report zero matches.
-    import os
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_file,
     )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEP_OUT_SCHEMA,
@@ -227,33 +160,21 @@ def test_streaming_cep_match_straddles_batch_boundary(spark, tmp_path):
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, event_type string, ts_us long"
     b1 = spark.createDataFrame(
         [(1, 7, "view", 1_000_000), (2, 7, "click", 2_000_000)], ddl
     )
     b2 = spark.createDataFrame([(3, 7, "purchase", 3_000_000)], ddl)
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
+    for seq, df in enumerate((b1, b2)):
+        stage_file(df, work, seq)
 
     raw = (
         spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        .parquet(f"{work}/src")
     )
-    committed = run_stream_committed(
-        streaming_cep_matches(raw, 3_600_000_000), work, "append",
-        CEP_OUT_SCHEMA,
+    committed = drain(
+        streaming_cep_matches(raw, 3_600_000_000), work, CEP_OUT_SCHEMA
     )
     rows = (
         committed.groupBy("user_id")
@@ -271,12 +192,11 @@ def test_streaming_cep_quantified_run_straddles_boundary(spark, tmp_path):
     # right quantifier length (b_len=5) — the fixed last-2-events
     # matcher structurally cannot. Also pins skip-past-last-row: a
     # second purchase right after reports no second match.
-    import os
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_file,
     )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEPQ_OUT_SCHEMA,
@@ -284,8 +204,6 @@ def test_streaming_cep_quantified_run_straddles_boundary(spark, tmp_path):
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, event_type string, ts_us long"
     b1 = spark.createDataFrame(
         [
@@ -305,26 +223,16 @@ def test_streaming_cep_quantified_run_straddles_boundary(spark, tmp_path):
         ],
         ddl,
     )
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
+    for seq, df in enumerate((b1, b2)):
+        stage_file(df, work, seq)
 
     raw = (
         spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        .parquet(f"{work}/src")
     )
-    committed = run_stream_committed(
-        streaming_cep_quantified(raw, 3_600_000_000), work, "append",
-        CEPQ_OUT_SCHEMA,
+    committed = drain(
+        streaming_cep_quantified(raw, 3_600_000_000), work, CEPQ_OUT_SCHEMA
     )
     rows = (
         committed.groupBy("user_id")
@@ -345,13 +253,10 @@ def test_streaming_session_spans_batch_boundary(spark, tmp_path):
     # Events 10 minutes apart across the batch boundary: ONE session
     # (only the 30-min gap closes a session, never a batch boundary),
     # and a >30-min gap inside batch 2 opens a second one. The update
-    # changelog's latest batch carries the running totals.
-    import os
-
-    from pyspark.sql import functions as F
-
+    # changelog's latest row per user carries the running totals.
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
+        drain,
+        stage_file,
     )
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_OUT_SCHEMA,
@@ -359,8 +264,6 @@ def test_streaming_session_spans_batch_boundary(spark, tmp_path):
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, ts_us long"
     m = 60_000_000  # one minute in us
     b1 = spark.createDataFrame(
@@ -369,32 +272,19 @@ def test_streaming_session_spans_batch_boundary(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(3, 7, 20 * m), (4, 7, 60 * m), (5, 7, 65 * m)], ddl
     )
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
+    for seq, df in enumerate((b1, b2)):
+        stage_file(df, work, seq)
 
     raw = (
         spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    committed = run_stream_committed(
-        streaming_sessionize(raw, 1800), work, "update", SESSION_OUT_SCHEMA
-    )
-    w_latest = F.col("_batch") == F.lit(
-        committed.agg(F.max("_batch")).collect()[0][0]
+        .parquet(f"{work}/src")
     )
     rows = (
-        committed.filter(w_latest)
-        .select("user_id", "n_sessions", "n_events", "max_session_events")
+        drain(
+            streaming_sessionize(raw, 1800), work, SESSION_OUT_SCHEMA,
+            key="user_id",
+        )
         .localCheckpoint(eager=True)
         .collect()
     )
@@ -811,7 +701,7 @@ def test_rocksdb_changelog_checkpointing_recovers(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
 
     try:
         for k, v in confs.items():

@@ -15,6 +15,7 @@ from kafka_streams_aggregate_spark.operators.inventory_fold import (
     python_fold_oracle,
 )
 from kafka_streams_aggregate_spark.schemas import INVENTORY_UPDATE_FLAT_SCHEMA
+from kafka_streams_aggregate_spark.sources.eventlog_source import _await_drained
 from kafka_streams_aggregate_spark.streaming.inventory_stream import (
     streaming_inventory_fold,
 )
@@ -53,7 +54,7 @@ def _run_stream(spark, src_dir, ckpt_dir, collected=None, sink_fn=None, strict=F
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     return q
 
 
@@ -295,7 +296,7 @@ def test_windowed_stream_with_watermark_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q, 120)
     streamed = {
         r["ws"]: (r["n"], r["v"]) for r in spark.sql("SELECT * FROM win_sink").collect()
     }
@@ -349,7 +350,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
 
     write(
         [(1, t0, 1.0), (2, t0 + dt.timedelta(minutes=1), 2.0), (1, t0, 1.0)],
@@ -475,7 +476,7 @@ def test_sessionize_ttl_evicts_idle_state_and_restarts_sessions(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q, 300)
 
     totals = [
         p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress
@@ -563,7 +564,7 @@ def test_streaming_query_listener_and_observed_metrics(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
         # listener events are delivered asynchronously
         deadline = _time.time() + 30
         while _time.time() < deadline:
@@ -650,7 +651,7 @@ def test_watermark_drop_metric_counts_late_rows(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
         deadline = _time.time() + 30
         while _time.time() < deadline:
             if any(
