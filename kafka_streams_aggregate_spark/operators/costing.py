@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_sorted_groups
+
 __all__ = ["periodic_lifo_allocation", "avco_perpetual_fold"]
 
 
@@ -129,68 +131,35 @@ def avco_perpetual_fold(ledger: DataFrame) -> DataFrame:
     the recursive-CTE oracle carry the identical residual forward.
     """
 
-    # Partition kernel (mapInPandas over product-clustered, seq-sorted
-    # partitions) instead of one-group-per-call applyInPandas: with
-    # thousands of small product groups the per-group Arrow/pandas
-    # round trip dominates the fold itself. State for the OPEN product
-    # carries across Arrow batch boundaries; the float op sequence per
-    # product is unchanged (bit-reproducibility argument intact).
-    def fold_partition(batches):
-        import pandas as pd
+    def init():
+        return (0, 0, 0.0, 0.0)  # on_hand, unfilled, value, cogs
 
-        cur = None  # (product, on_hand, unfilled, value, cogs)
-        out = {
-            "product": [], "on_hand": [], "unfilled_qty": [],
-            "value_cents": [], "cogs_cents": [],
-        }
+    def step(st, side, qty, unit_cents):
+        on_hand, unfilled, value, cogs = st
+        qty = int(qty)
+        if side == "IN":
+            value = value + float(qty * int(unit_cents))
+            on_hand = on_hand + qty
+        elif on_hand > 0:
+            unit = value / on_hand
+            take = qty if qty < on_hand else on_hand
+            t = take * unit
+            cogs = cogs + t
+            value = value - t
+            on_hand = on_hand - take
+            unfilled = unfilled + (qty - take)
+        else:
+            unfilled = unfilled + qty
+        return (on_hand, unfilled, value, cogs)
 
-        def _flush():
-            if cur is not None:
-                out["product"].append(cur[0])
-                out["on_hand"].append(cur[1])
-                out["unfilled_qty"].append(cur[2])
-                out["value_cents"].append(cur[3])
-                out["cogs_cents"].append(cur[4])
+    def emit(product, st):
+        return (product, *st)
 
-        for pdf in batches:
-            for p, side, qty, unit_cents in zip(
-                pdf["product"], pdf["side"],
-                pdf["qty"].astype("int64"), pdf["unit_cents"],
-            ):
-                p = int(p)
-                if cur is None or cur[0] != p:
-                    _flush()
-                    cur = (p, 0, 0, 0.0, 0.0)
-                _, on_hand, unfilled, value, cogs = cur
-                qty = int(qty)
-                if side == "IN":
-                    value = value + float(qty * int(unit_cents))
-                    on_hand = on_hand + qty
-                else:
-                    if on_hand > 0:
-                        unit = value / on_hand
-                        take = qty if qty < on_hand else on_hand
-                        t = take * unit
-                        cogs = cogs + t
-                        value = value - t
-                        on_hand = on_hand - take
-                        unfilled = unfilled + (qty - take)
-                    else:
-                        unfilled = unfilled + qty
-                cur = (p, on_hand, unfilled, value, cogs)
-        _flush()
-        if out["product"]:
-            yield pd.DataFrame(out)
-
-    return (
-        ledger.select("product", "seq", "side", "qty", "unit_cents")
-        .repartition("product")
-        .sortWithinPartitions("product", "seq")
-        .mapInPandas(
-            fold_partition,
-            "product bigint, on_hand bigint, unfilled_qty bigint, "
-            "value_cents double, cogs_cents double",
-        )
+    return fold_sorted_groups(
+        ledger, "product", ("seq",), ("side", "qty", "unit_cents"),
+        "product bigint, on_hand bigint, unfilled_qty bigint, "
+        "value_cents double, cogs_cents double",
+        init, step, emit,
     )
 
 
@@ -262,6 +231,29 @@ def safety_stock_stats(
     )
 
 
+def ss_policy_fold(s_small: int, s_big: int):
+    """The (s, S) recurrence, shared by ``ss_policy_sim`` and its
+    streaming twin (streaming/ss_stream.py). State (on_hand, lost,
+    orders, n_days, total), starting from a full position S; each day
+    serves what is on hand, then reorders up to S when the position
+    falls below s. Exact integer arithmetic throughout."""
+
+    def init():
+        return (s_big, 0, 0, 0, 0)
+
+    def step(st, q):
+        on_hand, lost, orders, n_days, total = st
+        q = int(q)
+        served = q if q <= on_hand else on_hand
+        on_hand -= served
+        if on_hand < s_small:
+            orders += 1
+            on_hand = s_big
+        return (on_hand, lost + (q - served), orders, n_days + 1, total + q)
+
+    return init, step
+
+
 def ss_policy_sim(
     demand: DataFrame,
     product_col: str = "product",
@@ -280,75 +272,30 @@ def ss_policy_sim(
     hidden).
 
     The recurrence is genuinely order-dependent (same family as the
-    AVCO fold): state per product is three int64s (on_hand, lost,
-    orders), advanced by an ``applyInPandas`` kernel in exact integer
-    arithmetic — so the DuckDB recursive-CTE oracle walking rn -> rn+1
-    matches cell-exactly.
+    AVCO fold): ``ss_policy_fold``'s int64 state advances in exact
+    integer arithmetic — so the DuckDB recursive-CTE oracle walking
+    rn -> rn+1 matches cell-exactly.
 
     Scale shape: one shuffle on product, O(1) state, O(days) per
-    product. The kernel is ``mapInPandas`` over product-clustered,
-    day-sorted partitions (NOT one-group-per-call applyInPandas:
-    with tens of thousands of small product groups the per-group
-    Arrow/pandas round trip dominates — measured 8.7s -> the
-    partition kernel at sf0.1's 20k products), carrying the open
-    product's state across Arrow batch boundaries inside a
-    partition. Output: (product, n_days, total_demand, lost_sales,
-    n_orders, end_on_hand) — BIGINT.
+    product (``fold_sorted_groups``). Output: (product, n_days,
+    total_demand, lost_sales, n_orders, end_on_hand) — BIGINT.
     """
     pc, dc, qc = product_col, day_col, qty_col
-    out_schema = (
-        "product bigint, n_days bigint, total_demand bigint, "
-        "lost_sales bigint, n_orders bigint, end_on_hand bigint"
-    )
+    init, step = ss_policy_fold(s_small, s_big)
 
-    # Self-contained closure (pickled by value) — verify skill rule.
-    # Arrow batches can split a product's day-run, so the fold keeps
-    # the open product's state between batches and flushes it only
-    # when the product changes (or the partition iterator ends).
-    def _fold_partition(batches):
-        import pandas as _pd
-
-        cur = None  # (product, n_days, total, lost, orders, on_hand)
-        out = {
-            "product": [], "n_days": [], "total_demand": [],
-            "lost_sales": [], "n_orders": [], "end_on_hand": [],
-        }
-
-        def _flush():
-            if cur is not None:
-                out["product"].append(cur[0])
-                out["n_days"].append(cur[1])
-                out["total_demand"].append(cur[2])
-                out["lost_sales"].append(cur[3])
-                out["n_orders"].append(cur[4])
-                out["end_on_hand"].append(cur[5])
-
-        for pdf in batches:
-            for p, q in zip(pdf[pc], pdf[qc]):
-                p = int(p)
-                q = int(q)
-                if cur is None or cur[0] != p:
-                    _flush()
-                    cur = (p, 0, 0, 0, 0, s_big)
-                _, n_days, total, lost, orders, on_hand = cur
-                served = q if q <= on_hand else on_hand
-                on_hand -= served
-                if on_hand < s_small:
-                    orders += 1
-                    on_hand = s_big
-                cur = (
-                    p, n_days + 1, total + q,
-                    lost + (q - served), orders, on_hand,
-                )
-        _flush()
-        if out["product"]:
-            yield _pd.DataFrame(out)
+    def emit(product, st):
+        on_hand, lost, orders, n_days, total = st
+        return (product, n_days, total, lost, orders, on_hand)
 
     daily = demand.groupBy(F.col(pc).alias(pc), F.col(dc)).agg(
         F.sum(F.col(qc).cast("bigint")).cast("bigint").alias(qc)
     )
-    clustered = daily.repartition(pc).sortWithinPartitions(pc, dc)
-    return clustered.mapInPandas(_fold_partition, out_schema)
+    return fold_sorted_groups(
+        daily, pc, (dc,), (qc,),
+        "product bigint, n_days bigint, total_demand bigint, "
+        "lost_sales bigint, n_orders bigint, end_on_hand bigint",
+        init, step, emit,
+    )
 
 
 def eoq_policy(
@@ -630,7 +577,7 @@ def croston_forecast(
 
     Shape: filter to nonzero events (the sparse set — at 100 TB this
     is the whole point: state scales with EVENTS, not periods), one
-    lag window for intervals, one partition-kernel fold per product.
+    lag window for intervals, one ``fold_sorted_groups`` pass per product.
 
     Output: (product, n_events, z_size, p_interval, croston_per_period).
     """
@@ -656,69 +603,26 @@ def croston_forecast(
         )
         .select("product", "t", "q", "interval")
     )
-    out_schema = (
+
+    def init():
+        return (0, None, None)  # n_events, z, p
+
+    def step(st, q, interval):
+        n, z, p = st
+        if z is None:
+            return (1, float(q), float(interval))
+        return (n + 1, 0.5 * q + 0.5 * z, 0.5 * interval + 0.5 * p)
+
+    def emit(product, st):
+        n, z, p = st
+        return (product, n, z, p, z / p)
+
+    return fold_sorted_groups(
+        events, "product", ("t",), ("q", "interval"),
         "product bigint, n_events bigint, z_size double, "
-        "p_interval double, croston_per_period double"
+        "p_interval double, croston_per_period double",
+        init, step, emit,
     )
-
-    # Partition kernel (the round-10 rule): one applyInPandas call per
-    # product pays an Arrow round trip that DOMINATES with tens of
-    # thousands of small series (measured 74.6s -> ~2s at sf0.1 / 20k
-    # products). Open-series state carries across Arrow batch
-    # boundaries; the float op sequence per series is unchanged, so
-    # the bit-equality pins survive verbatim.
-    def _fold_partition(batches):
-        import pandas as _pd
-
-        cur = None  # (product, n_events, z, p)
-        out = {
-            "product": [], "n_events": [], "z_size": [],
-            "p_interval": [], "croston_per_period": [],
-        }
-
-        def _flush():
-            if cur is not None:
-                out["product"].append(cur[0])
-                out["n_events"].append(cur[1])
-                out["z_size"].append(cur[2])
-                out["p_interval"].append(cur[3])
-                out["croston_per_period"].append(cur[2] / cur[3])
-
-        for pdf in batches:
-            for prod, q, interval in zip(
-                pdf["product"], pdf["q"], pdf["interval"]
-            ):
-                prod = int(prod)
-                if cur is None or cur[0] != prod:
-                    _flush()
-                    cur = (prod, 1, float(q), float(interval))
-                else:
-                    cur = (
-                        prod,
-                        cur[1] + 1,
-                        0.5 * q + 0.5 * cur[2],
-                        0.5 * interval + 0.5 * cur[3],
-                    )
-        _flush()
-        if out["product"]:
-            yield _pd.DataFrame(
-                {
-                    "product": _pd.Series(out["product"], dtype="int64"),
-                    "n_events": _pd.Series(out["n_events"], dtype="int64"),
-                    "z_size": _pd.Series(out["z_size"], dtype="float64"),
-                    "p_interval": _pd.Series(
-                        out["p_interval"], dtype="float64"
-                    ),
-                    "croston_per_period": _pd.Series(
-                        out["croston_per_period"], dtype="float64"
-                    ),
-                }
-            )
-
-    clustered = events.repartition("product").sortWithinPartitions(
-        "product", "t"
-    )
-    return clustered.mapInPandas(_fold_partition, out_schema)
 
 
 def newsvendor_policy(

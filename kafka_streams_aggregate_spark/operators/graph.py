@@ -425,7 +425,10 @@ def bipartite_projection(
     cosine). With ``max_degree=None`` the audit column is omitted and
     behavior is unchanged.
 
-    Input ``pairs`` must be DISTINCT (left, right) tuples. Output:
+    Input ``pairs`` must be DISTINCT (left, right) tuples, and the
+    left key must be NON-NULL: a NULL left key never joins to itself,
+    so its rows would count in the item sizes (n_a, n_b) and, under
+    ``max_degree``, form one degree group, yet never co-occur. Output:
     (item_a, item_b, n_common, n_a, n_b, weight, rank[, n_capped]).
     """
     lc, rc = left_col, right_col

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_sorted_groups
+
 __all__ = ["spearman_rank_corr"]
 
 
@@ -281,7 +283,7 @@ def mann_kendall(
         S = sum_{i<j} sign(v_j - v_i)
 
     computed per group in O(n log n) with a Fenwick-tree inversion
-    count inside an ``applyInPandas`` fold (the O(n^2) pair join a SQL
+    count when the group's fold closes (the O(n^2) pair join a SQL
     engine would run is the ORACLE, not the operator). S and the
     tie-corrected variance NUMERATOR
 
@@ -296,98 +298,63 @@ def mann_kendall(
     O(distinct values) memory. Output: (group_key, n, s_stat, var_num,
     z_score).
     """
-    grp, tc, ic, vc = group_col, ts_col, id_col, value_cents_col
-    out_schema = (
+    import math
+
+    def init():
+        return []
+
+    def step(vals, v):
+        vals.append(int(v))
+        return vals
+
+    def emit(key, vals):
+        n = len(vals)
+        if n < 2:
+            return None
+        sv = sorted(set(vals))
+        pos = {v: i + 1 for i, v in enumerate(sv)}
+        tree = [0] * (len(sv) + 1)
+
+        def _upd(i):
+            while i <= len(sv):
+                tree[i] += 1
+                i += i & -i
+
+        def _qry(i):
+            acc = 0
+            while i > 0:
+                acc += tree[i]
+                i -= i & -i
+            return acc
+
+        conc = disc = 0
+        for seen, v in enumerate(vals):
+            k = pos[v]
+            le = _qry(k)
+            lt = _qry(k - 1)
+            conc += lt  # earlier values strictly below v
+            disc += seen - le  # earlier values strictly above v
+            _upd(k)
+        s_stat = conc - disc
+        ties: dict = {}
+        for v in vals:
+            ties[v] = ties.get(v, 0) + 1
+        var_num = n * (n - 1) * (2 * n + 5) - sum(
+            t * (t - 1) * (2 * t + 5) for t in ties.values() if t > 1
+        )
+        if s_stat > 0:
+            z = (s_stat - 1.0) / math.sqrt(var_num / 18.0)
+        elif s_stat < 0:
+            z = (s_stat + 1.0) / math.sqrt(var_num / 18.0)
+        else:
+            z = 0.0
+        return (key, n, s_stat, var_num, z)
+
+    return fold_sorted_groups(
+        df, group_col, (ts_col, id_col), (value_cents_col,),
         "group_key bigint, n bigint, s_stat bigint, var_num bigint, "
-        "z_score double"
-    )
-
-    # Partition kernel (mapInPandas over key-clustered (ts, id)-sorted
-    # partitions) instead of one-group-per-call applyInPandas — the
-    # per-group Arrow round trip dominates with thousands of small
-    # series. The open series buffers its ordered values across Arrow
-    # batch boundaries; the Fenwick computation runs at series flush.
-    # Self-contained closure (pickled by value) — verify skill rule.
-    def _fold_partition(batches):
-        import math as _math
-
-        import pandas as _pd
-
-        def _mk(vals):
-            n = len(vals)
-            sv = sorted(set(vals))
-            pos = {v: i + 1 for i, v in enumerate(sv)}
-            tree = [0] * (len(sv) + 1)
-
-            def _upd(i):
-                while i <= len(sv):
-                    tree[i] += 1
-                    i += i & -i
-
-            def _qry(i):
-                acc = 0
-                while i > 0:
-                    acc += tree[i]
-                    i -= i & -i
-                return acc
-
-            conc = disc = 0
-            for seen, v in enumerate(vals):
-                k = pos[v]
-                le = _qry(k)
-                lt = _qry(k - 1)
-                conc += lt  # earlier values strictly below v
-                disc += seen - le  # earlier values strictly above v
-                _upd(k)
-            s_stat = conc - disc
-            ties: dict = {}
-            for v in vals:
-                ties[v] = ties.get(v, 0) + 1
-            var_num = n * (n - 1) * (2 * n + 5) - sum(
-                t * (t - 1) * (2 * t + 5) for t in ties.values() if t > 1
-            )
-            if s_stat > 0:
-                z = (s_stat - 1.0) / _math.sqrt(var_num / 18.0)
-            elif s_stat < 0:
-                z = (s_stat + 1.0) / _math.sqrt(var_num / 18.0)
-            else:
-                z = 0.0
-            return s_stat, var_num, z
-
-        key = None
-        vals: list = []
-        out = {
-            "group_key": [], "n": [], "s_stat": [], "var_num": [],
-            "z_score": [],
-        }
-
-        def _flush():
-            if key is not None and len(vals) >= 2:
-                s_stat, var_num, z = _mk(vals)
-                out["group_key"].append(key)
-                out["n"].append(len(vals))
-                out["s_stat"].append(s_stat)
-                out["var_num"].append(var_num)
-                out["z_score"].append(z)
-
-        for pdf in batches:
-            for k, v in zip(pdf[grp], pdf[vc]):
-                k = int(k)
-                if key is None or key != k:
-                    _flush()
-                    key = k
-                    vals = []
-                vals.append(int(v))
-        _flush()
-        if out["group_key"]:
-            yield _pd.DataFrame(out)
-
-    return (
-        df.select(grp, tc, ic, vc)
-        .repartition(grp)
-        .sortWithinPartitions(grp, tc, ic)
-        .mapInPandas(_fold_partition, out_schema)
-        .where(F.col("n") >= 2)
+        "z_score double",
+        init, step, emit,
     )
 
 

@@ -2913,11 +2913,8 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sequential per-series fold no window frame can express "
         "(each output depends on the previous OUTPUT, not previous "
         "inputs): s_t = 0.5*v_t + 0.5*s_(t-1) per user in (ts, "
-        "event_id) order, via the round-10 partition kernel "
-        "(repartition + sortWithinPartitions + mapInPandas carrying "
-        "the open series across Arrow batches; r16-opt — the "
-        "per-group Arrow round trip dominated at 1500 small series, "
-        "interleaved A/B 3.63 -> 0.46s, outputs hex-identical). "
+        "event_id) order, via fold_sorted_groups (one partition "
+        "kernel carrying the open series across Arrow batches). "
         "alpha = 1/2 is the "
         "cross-engine trick: both multiplies are exact power-of-two "
         "scalings, so each step is ONE correctly-rounded IEEE "
@@ -2933,44 +2930,12 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "pandas-udf", "stateful-fold"),
 )
 def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, "events", sf_dir)
-
-    # Self-contained closure (verify skill notes); per-series float op
-    # sequence identical to the prior per-group fold, so the bit-equal
-    # contract with the recursive-CTE oracle survives verbatim.
-    def fold_partition(batches):
-        import pandas as pd
-
-        cur = None  # (key, n, s)
-        out = {"user_id": [], "n_events": [], "ewma_last": []}
-
-        def flush():
-            if cur is not None:
-                out["user_id"].append(cur[0])
-                out["n_events"].append(cur[1])
-                out["ewma_last"].append(cur[2])
-
-        for pdf in batches:
-            for k, v in zip(pdf["user_id"], pdf["value"].astype("float64")):
-                k = int(k)
-                if cur is None or cur[0] != k:
-                    flush()
-                    cur = (k, 1, v)
-                else:
-                    cur = (k, cur[1] + 1, 0.5 * v + 0.5 * cur[2])
-        flush()
-        if out["user_id"]:
-            yield pd.DataFrame(out)
-
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(
-            fold_partition,
-            "user_id bigint, n_events bigint, ewma_last double",
-        )
+    from kafka_streams_aggregate_spark.operators.pandas_ops import (
+        ewma_smoothing,
     )
+
+    events = load_table(spark, "events", sf_dir)
+    return ewma_smoothing(events, "user_id", "value", "ts", "event_id")
 
 
 @register(

@@ -83,84 +83,8 @@ def load_all() -> dict[str, QueryDef]:
 # (tier 3) the core reference-parity set (re-verified every round);
 # (tier 4) everything else in registration order — already green in a
 # prior round's snapshot and unchanged since.
-# Round 14: tier 1 (never verified) opens with the staged batch-3
-# graduations q_cronbach_alpha + q_lin_ccc and the two engine-row
-# graduations q_rocksdb_changelog_restore + q_cbo_stats_selectivity
-# (queries/round14.py) and grows with this round's fresh
-# registrations; the rows-only rotation re-admits q_dedup_simhash
-# automatically (14 % 4 = 2 in the sorted rows-only list). Tier 2 carries the queries whose
-# implementation or oracle changed this round per the r13 advice
-# fixes: q_page_trend (fully-dropped groups now emit NULL-stat rows
-# — dropped drives a left join, both engines), q_chunk_mixing
-# (offsets window rebuilt over the renamed columns; registered
-# behavior unchanged), q_corpus_prep_pipeline (try_cast fallback
-# weight for non-'srcN' sources; registered behavior unchanged).
-# The fresh queue landed same-round (18 more tier-1 names in
-# queries/round14.py: 6 nonparametric/association stats, RSI +
-# drawdown, 4 LLM-data quality/mixture, int8 Lloyd step, Neyman +
-# Horvitz-Thompson, Katz + rich-club, EXECUTE IMMEDIATE), plus a
-# second same-round batch of 5 (near-dup cluster profile,
-# Ansari-Bradley, Ljung-Box, and the AQE-skew-join + bucket-pruning
-# engine graduations), the watermark-late-drop engine graduation
-# (q_watermark_late_drop), and the same-round graduation of the
-# late-staged r15 pair (q_durbin_watson, q_bartels_rvn — replaced in
-# the staging queue by seasonal Sen slope + WAPE/bias,
-# tests/test_r15_stage2.py).
-# Round 15: tier 1 opens with the staged batch-2 graduations
-# q_seasonal_sen_slope + q_forecast_wape and the fresh stats batch
-# (q_turning_points, q_cox_stuart, q_kendall_w, q_icc_oneway,
-# q_theil_u2, q_tracking_signal, q_dixon_q, q_ordinal_patterns,
-# q_grubbs_outlier, q_bowker_symmetry — queries/round15.py) and
-# grows with this round's remaining registrations; the rows-only
-# rotation re-admits q_sim_cosine_topk_gemm (15 % 4 = 3 in the
-# sorted rows-only list). Tier 2 = the three r14-advice oracle-text
-# changes (values unchanged on real data; SQL changed).
-# A second batch adds the LLM-data six (q_dedup_canonical_packing,
-# q_url_dedup, q_quality_mixture_reweight, q_cross_source_dups,
-# q_vocab_coverage, q_ngram_novelty).
-# A third batch graduates the last two graduatable engine rows
-# (q_listagg_ordered, q_sink_exactly_once); a fourth adds
-# q_spatial_autocorr (Moran's I + Geary's C); wave 5 graduates the
-# staged r16 pair same-round (q_fligner_policello, q_cucconi — the
-# r14 precedent; replaced in the staging queue by Lepage + quantile
-# crossing or whatever round 16 opens with) and adds
-# q_seasonal_mann_kendall, q_pacf2, q_process_capability.
-# Wave 6 adds the eval-set preparation capstone
-# (q_eval_prep_pipeline) and the repetition-discounted mixture
-# (q_dup_weighted_mixture).
-# Round 16: tier 1 opens with the staged batch-2 graduations
-# q_kuiper + q_wasserstein_drift (queries/round16.py) and grows
-# with this round's fresh registrations; the rows-only rotation
-# re-admits q_approx_aggregates (16 % 4 = 0 in the sorted rows-only
-# list; its green _bounds twin remains the certificate). Tier 2 =
-# the two r15-advice oracle-text changes (values unchanged on real
-# data — the zero-rate guard and the utm_/schemeless URL fixes only
-# bite on degenerate inputs absent from the synthesized URLs — but
-# the SQL changed, so they re-verify).
-# Wave 7 graduates the staged r17 pair same-round (q_mann_whitney,
-# q_brunner_munzel — the r14/r15 precedent; the staging queue is
-# restocked, SURVEY §15). Wave 8 adds the corpus-comparison text pair
-# (q_vocab_overlap, q_token_burstiness); wave 9 the RxC chi-square /
-# Cramér's V² and the decile-lift targeting report
-# (q_chi2_contingency, q_decile_lift); wave 10 the quantile-forecast
-# eval pair (q_pinball_loss, q_smape_eval); wave 11 graduates the
-# staged r17 batch-2 pair same-round (q_mood_scale, q_conover_scale
-# — the queue is restocked with Lepage, tests/test_r17_stage3.py);
-# wave 12 graduates streaming telemetry (q_stream_telemetry — the
-# progress feed as verified data, the LAST non-environment-gated
-# engine row).
-# Wave 13 graduates the staged r17 batch-3 operator (q_lepage);
-# wave 14 adds the fresh six (q_diebold_mariano,
-# q_variance_homogeneity, q_ewma_chart, q_brier_decomposition,
-# q_mattr, q_pair_overlap_density — tests/test_r16_wave14.py);
-# wave 15 graduates three more staged r17 operators (q_snht,
-# q_chunk_dup_profile, q_winnowing — Buishand stays staged).
-# Window: 41 tier-1 (8 graduations + 3 LLM directions + 21 stats/TS
-# + 2 spatial + 2 engine graduations + 2 audits + 1 events + 3 text
-# + 2 ml-eval + 2 llm-dedup) + 1 rows-only + 3 tier-2 (the two
-# advice fixes plus the q_aqe_skew_join re-size) + 5 pins
-# = 50 <= 50 (SURVEY §15) — the window is FULL; r17 must not add
-# tier-1 rows until the r16 snapshot lands.
+# The round-by-round history of what each tier held lives in
+# OPTIMIZATION_r17.md ("Registry window history").
 _TIER_2_CHANGED_THIS_ROUND = (
     # r16: the r15-advice fixes touched these operators AND their
     # oracle texts.

@@ -26,7 +26,8 @@ forever; Arrow-batched transfer; no Python in any non-fold stage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_stream_groups
 
 CUSUM_STATE_SCHEMA = "s long, n long, n_alarms long, s_max long"
 CUSUM_OUT_SCHEMA = (
@@ -42,42 +43,25 @@ def streaming_cusum(
     value)``: one UPDATE row per (user, batch) with the running
     statistic, its max, and the alarm count so far."""
 
-    def _fold_group(key, pdf_iter, state):
-        import math
+    import math
 
-        import pandas as pd
+    def init():
+        return (0, 0, 0, 0)  # s, n, n_alarms, s_max
 
-        s, n, n_alarms, s_max = 0, 0, 0, 0
-        if state.exists:
-            s, n, n_alarms, s_max = (int(x) for x in state.get)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values(["ts_us", "event_id"], kind="mergesort")
-        for v in batch["value"].astype("float64"):
-            d = int(math.floor(v * 100.0)) - k_cents
-            s = s + d
-            if s < 0:
-                s = 0
-            n += 1
-            if s > s_max:
-                s_max = s
-            if s > h_cents:
-                n_alarms += 1
-        state.update((s, n, n_alarms, s_max))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_events": [n],
-                "cusum_last": [s],
-                "cusum_max": [s_max],
-                "n_alarms": [n_alarms],
-            }
-        )
+    def step(st, v):
+        s, n, n_alarms, s_max = st
+        s = s + (int(math.floor(float(v) * 100.0)) - k_cents)
+        if s < 0:
+            s = 0
+        if s > h_cents:
+            n_alarms += 1
+        return (s, n + 1, n_alarms, max(s, s_max))
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def emit(user_id, st):
+        s, n, n_alarms, s_max = st
+        return (user_id, n, s, s_max, n_alarms)
+
+    return fold_stream_groups(
+        events, "user_id", ("ts_us", "event_id"), ("value",),
+        CUSUM_OUT_SCHEMA, CUSUM_STATE_SCHEMA, init, step, emit,
     )

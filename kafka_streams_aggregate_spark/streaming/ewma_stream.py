@@ -3,9 +3,10 @@
 
 The batch query documents that the fold "runs incrementally under
 applyInPandasWithState for streams" — this module is that claim made
-real: state per series is ONE float (the running smoothed value) plus
-a count; each micro-batch sorts its slice by (ts_us, event_id) and
-advances s_t = 0.5*v_t + 0.5*s_{t-1} from the carried state. Because
+real with the SAME fold (``operators/pandas_ops.py:ewma_fold``): state
+per series is ONE float (the running smoothed value) plus a count;
+each micro-batch sorts its slice by (ts_us, event_id) and advances
+s_t = 0.5*v_t + 0.5*s_{t-1} from the carried state. Because
 alpha = 1/2 makes each step a single correctly-rounded IEEE add (both
 multiplies are exact power-of-two scalings), the streamed final value
 is BIT-equal to the batch fold — and to the DuckDB recursive-CTE
@@ -19,7 +20,11 @@ forever; Arrow-batched transfer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.operators.pandas_ops import (
+    ewma_fold,
+    fold_stream_groups,
+)
 
 EWMA_STATE_SCHEMA = "s double, n long"
 EWMA_OUT_SCHEMA = "user_id long, n_events long, ewma_last double"
@@ -31,33 +36,12 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
     (user, batch) with the events-so-far count and current smoothed
     value."""
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
+    init, step = ewma_fold()
 
-        s, n = None, 0
-        if state.exists:
-            s, n = state.get
-            s = float(s)
-            n = int(n)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values(["ts_us", "event_id"], kind="mergesort")
-        for v in batch["value"].astype("float64"):
-            s = v if s is None else 0.5 * v + 0.5 * s
-            n += 1
-        state.update((s, n))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_events": [n],
-                "ewma_last": [s],
-            }
-        )
+    def emit(user_id, st):
+        return (user_id, st[1], st[0])
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream_groups(
+        events, "user_id", ("ts_us", "event_id"), ("value",),
+        EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA, init, step, emit,
     )

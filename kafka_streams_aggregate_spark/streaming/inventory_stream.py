@@ -26,7 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_stream_groups
 
 OUTPUT_SCHEMA = "product_code string, count bigint"
 STATE_SCHEMA = "count bigint"
@@ -50,54 +51,27 @@ def streaming_inventory_fold(updates: DataFrame, strict: bool = False) -> DataFr
     Pair with ``.writeStream.outputMode("update")``.
     """
 
-    # NESTED so cloudpickle ships it by value: executor Python workers
-    # must never need this package importable (the calling harness may
-    # run from any CWD without the repo on PYTHONPATH).
-    def _fold_group(key, pdf_iter, state):
-        """Per-key state function. Folds the micro-batch's events in
-        seq order on top of the stored count (init 0, mirroring
-        InventoryCountEvent.java:32), then emits one updated row — the
-        latest aggregate for the key, i.e. the changelog record the
-        reference produces per commit interval. In strict mode the
-        aggregate can become None (tombstoned) mid-batch; if it ends the
-        batch None, the key's state is removed and a NULL-count deletion
-        marker is emitted."""
-        import pandas as pd
+    def init():
+        return (0,)  # InventoryCountEvent.java:32
 
-        count = (state.get[0] if state.exists else None) if strict else (
-            state.get[0] if state.exists else 0
-        )
-        rows = [pdf for pdf in pdf_iter]
-        batch = pd.concat(rows) if len(rows) > 1 else rows[0]
-        batch = batch.sort_values("seq")
-        for action, delta in zip(batch["action"], batch["delta"]):
-            if pd.isna(delta) or action is None:
-                continue  # null-value record: dropped (Kafka Streams rule)
-            d = int(delta)
-            if action == "INC":
-                count = (count or 0) + d
-            elif action == "DEC":
-                count = (count or 0) - d
-            elif action == "REP":
-                count = d
-            else:
-                count = None  # strict mode only: tombstone
-        if strict and count is None:
-            if state.exists:
-                state.remove()
-            yield pd.DataFrame({"product_code": [key[0]], "count": [None]})
-        else:
-            state.update((int(count),))
-            yield pd.DataFrame({"product_code": [key[0]], "count": [count]})
+    def step(st, action, delta):
+        d = int(delta)
+        if action == "INC":
+            return (st[0] + d,)
+        if action == "DEC":
+            return (st[0] - d,)
+        if action == "REP":
+            return (d,)
+        return None  # strict mode only: tombstone
+
+    def emit(product_code, st):
+        return (product_code, None if st is None else st[0])
 
     action_ok = F.col("action").isNotNull()
     if not strict:
         action_ok = action_ok & F.col("action").isin("INC", "DEC", "REP")
     valid = updates.filter(F.col("delta").isNotNull() & action_ok)
-    return valid.groupBy("product_code").applyInPandasWithState(
-        _fold_group,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream_groups(
+        valid, "product_code", ("seq",), ("action", "delta"),
+        OUTPUT_SCHEMA, STATE_SCHEMA, init, step, emit,
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_stream_groups
+
 SESSION_STATE_SCHEMA = (
     "last_ts long, cur_events long, max_events long, "
     "n_sessions long, n_events long"
@@ -43,42 +45,25 @@ def streaming_sessionize(events: DataFrame, gap_seconds: int) -> DataFrame:
 
     gap_us = gap_seconds * 1_000_000
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
+    def init():
+        return (None, 0, 0, 0, 0)  # last_ts, cur, max, sessions, events
 
-        last_ts, cur, mx, ns, ne = None, 0, 0, 0, 0
-        if state.exists:
-            last_ts, cur, mx, ns, ne = (
-                v if v is None else int(v) for v in state.get
-            )
-        rows = [pdf for pdf in pdf_iter]
-        batch = pd.concat(rows) if len(rows) > 1 else rows[0]
-        batch = batch.sort_values(["ts_us", "event_id"])
-        for ts in batch["ts_us"]:
-            ts = int(ts)
-            if last_ts is None or ts - last_ts > gap_us:
-                ns += 1
-                cur = 0
-            cur += 1
-            ne += 1
-            mx = max(mx, cur)
-            last_ts = ts
-        state.update((last_ts, cur, mx, ns, ne))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_sessions": [ns],
-                "n_events": [ne],
-                "max_session_events": [mx],
-            }
-        )
+    def step(st, ts):
+        last_ts, cur, mx, ns, ne = st
+        ts = int(ts)
+        if last_ts is None or ts - last_ts > gap_us:
+            ns += 1
+            cur = 0
+        cur += 1
+        return (ts, cur, max(mx, cur), ns, ne + 1)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def emit(user_id, st):
+        _, _, mx, ns, ne = st
+        return (user_id, ns, ne, mx)
+
+    return fold_stream_groups(
+        events, "user_id", ("ts_us", "event_id"), ("ts_us",),
+        SESSION_OUT_SCHEMA, SESSION_STATE_SCHEMA, init, step, emit,
     )
 
 

@@ -1,11 +1,12 @@
 """Streaming (s, S) inventory-policy monitor: the cross-batch
-incremental twin of ``operators/costing.py:ss_policy_sim``.
+incremental twin of ``operators/costing.py:ss_policy_sim``, running
+the same ``ss_policy_fold``.
 
 The reference app is a Kafka changelog consumer keeping per-key counts;
 the operational question a warehouse asks of that stream is "did we
 just cross the reorder point, and what have we lost to stockouts so
 far?" — which is exactly the (s, S) fold run INCREMENTALLY: state per
-product is four int64s (on_hand, lost, orders, n_days) carried across
+product is five int64s (on_hand, lost, orders, n_days, total) carried across
 micro-batches by ``applyInPandasWithState``; each batch walks its
 demand days in day order (the staged day-split source keeps per-key
 day order across the batch boundary).
@@ -22,9 +23,13 @@ forever; Arrow-batched transfer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 
-SS_STATE_SCHEMA = "on_hand long, lost long, orders long, n_days long"
+from kafka_streams_aggregate_spark.operators.costing import ss_policy_fold
+from kafka_streams_aggregate_spark.operators.pandas_ops import fold_stream_groups
+
+SS_STATE_SCHEMA = (
+    "on_hand long, lost long, orders long, n_days long, total long"
+)
 SS_OUT_SCHEMA = (
     "product long, n_days long, lost_sales long, n_orders long, "
     "end_on_hand long"
@@ -38,39 +43,13 @@ def streaming_ss_policy(
     daily-demand rows: one UPDATE row per (product, batch) with the
     running day count, lost sales, order count, and position."""
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
+    init, step = ss_policy_fold(s_small, s_big)
 
-        on_hand, lost, orders, n_days = s_big, 0, 0, 0
-        if state.exists:
-            on_hand, lost, orders, n_days = (int(x) for x in state.get)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values("d", kind="mergesort")
-        for q in batch["qty"]:
-            q = int(q)
-            served = q if q <= on_hand else on_hand
-            lost += q - served
-            on_hand -= served
-            if on_hand < s_small:
-                orders += 1
-                on_hand = s_big
-            n_days += 1
-        state.update((on_hand, lost, orders, n_days))
-        yield pd.DataFrame(
-            {
-                "product": [int(key[0])],
-                "n_days": [n_days],
-                "lost_sales": [lost],
-                "n_orders": [orders],
-                "end_on_hand": [on_hand],
-            }
-        )
+    def emit(product, st):
+        on_hand, lost, orders, n_days, _ = st
+        return (product, n_days, lost, orders, on_hand)
 
-    return demand.groupBy("product").applyInPandasWithState(
-        _fold_group,
-        outputStructType=SS_OUT_SCHEMA,
-        stateStructType=SS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream_groups(
+        demand, "product", ("d",), ("qty",),
+        SS_OUT_SCHEMA, SS_STATE_SCHEMA, init, step, emit,
     )

@@ -68,6 +68,16 @@ _TOUCHED_THIS_ROUND = {
     "test_r15_engine.py",
     "test_r16_wave5.py",
     "test_r16_wave12.py",
+    # the one keyed fold (fold_sorted_groups / fold_stream_groups) and
+    # every fold moved onto it
+    "test_partition_kernels.py",
+    "test_timeseries_ops.py",
+    "test_holt_winters.py",
+    "test_mann_kendall.py",
+    "test_costing.py",
+    "test_croston.py",
+    "test_ss_policy.py",
+    "test_forecast_backtest.py",
 }
 
 _ROTATION_MODULUS = 3

@@ -420,7 +420,7 @@ def test_bucketed_join_no_exchange_no_sort(spark, tmp_path):
 def test_round8_single_exchange_claims(spark):
     # Each of these docstrings claims a one-shuffle shape; pin it.
     for name in (
-        "q_ewma_smoothing",        # groupBy(user_id) into applyInPandas
+        "q_ewma_smoothing",        # repartition(user_id) into fold_sorted_groups
         "q_sample_weighted",       # scan -> global aggregate
         "q_file_provenance",       # union of scans -> per-file aggregate
         "q_pandas_udaf_dot",       # AggregateInPandas per priority
